@@ -37,10 +37,8 @@ object GraftSession {
       // scale, where coalescing is governed by
       // advisoryPartitionSizeInBytes (64 MiB) long before a sub-MiB
       // floor can bind; it is a floor, not a target — no plan shape
-      // changes. Env-overridable for deployments that want Spark's
-      // default back.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("SPARK_GRAFT_MIN_PARTITION_SIZE", "256KB"))
+      // changes. A 256K/512K/1M re-sweep kept 256 KiB.
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256KB")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel(logLevel)

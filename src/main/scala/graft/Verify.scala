@@ -1,14 +1,16 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Correctness dump: each SparkEntry.queries result → parquet, plus
+  * oracle_sql.json, for the DuckDB compare (tools/check.py).
+  * Usage: graft.Verify <sfDir> <outDir> [names...] — with names, only
+  * those queries and their oracle rows are dumped. */
 object Verify {
 
   /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
     * — a tab or CR in builder-authored SQL would otherwise make the
     * driver's json.load fail and silently zero the round's correctness.
-    * Shared with VerifyOne so the two dumps can never diverge. */
+    */
   private[graft] def jsonEscape(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"
@@ -34,11 +36,17 @@ object Verify {
   }
 
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outDir) = args
+    require(args.length >= 2, "usage: graft.Verify <sfDir> <outDir> [names...]")
+    val Array(sfDir, outDir) = args.take(2)
+    val names = args.drop(2).toSet
+    val unknown = names -- SparkEntry.queries.keySet
+    require(unknown.isEmpty, s"unknown queries: ${unknown.mkString(",")}")
+    def pick[V](m: Map[String, V]): Map[String, V] =
+      if (names.isEmpty) m else m.filter(kv => names(kv._1))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.local(cpus, cpus)
     new java.io.File(outDir).mkdirs()
-    SparkEntry.queries.foreach { case (name, fn) =>
+    pick(SparkEntry.queries).foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
@@ -46,7 +54,7 @@ object Verify {
       }
       finally releaseQueryState(spark)
     }
-    val json = SparkEntry.oracleSql
+    val json = pick(SparkEntry.oracleSql)
       .map { case (k, v) => s"${jsonEscape(k)}: ${jsonEscape(v)}" }
       .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

@@ -431,7 +431,7 @@ object Dedup {
     // probe stage — the pair EMISSION, the dominant cost — runs on the
     // BASE's partitioning, which is why q37 Spreads the base before
     // the signature projection (see DedupOps.q37). Two join-machinery
-    // alternatives were A/B'd (ProfileQ37AB/ProfileShjAB) and NOT
+    // alternatives were A/B'd (interleaved, same JVM) and NOT
     // applied: AQE maxShuffledHashJoinLocalMapThreshold=64MB read flat
     // under same-JVM interleaving, and a static SHUFFLE_HASH hint
     // matched the Spread win only by accidentally re-parallelizing
@@ -589,10 +589,15 @@ object Dedup {
     * being a constant tuned for either end. Production corpora are
     * always far above the threshold → always the skew-safe two-phase
     * shape; stats overestimates (joins upstream) also fall through to
-    * two-phase, the safe direction. Env-overridable for A/B. */
-  private[graft] def combineMinBytes: BigInt =
-    sys.env.get("GRAFT_DEDUP_COMBINE_MIN_BYTES").flatMap(_.toLongOption)
-      .map(BigInt(_)).getOrElse(BigInt(4L << 20))
+    * two-phase, the safe direction. A [[Pin]]ned input (a `LogicalRDD`
+    * leaf) is NOT such an overestimate: the leaf keeps the stats of
+    * the plan it was pinned from (measured on Spark 4.1.2: 65,049
+    * bytes for a filtered documents scan, before and after an eager
+    * or lazy localCheckpoint), so it picks the same shape as unpinned.
+    * Only a DataFrame built from a raw RDD (`createDataFrame(rdd, _)`)
+    * reports `sizeInBytes = Long.MaxValue` and always takes the
+    * two-phase shape. */
+  private val combineMinBytes: BigInt = BigInt(4L << 20)
 
   private def inputBytes(df: DataFrame): BigInt =
     df.queryExecution.optimizedPlan.stats.sizeInBytes

@@ -53,13 +53,19 @@ object Diversity {
       conv(substring(md5(concat(lit(seed.toString), lit(":"),
         node.cast("string"))), 1, 12), 16, 10).cast("long")
     // Round 19 (the CC convergence discipline, guide §1.2 don't
-    // serialize jobs): the undecided-set size rides each round's OWN
-    // eager-pin materialization as an observed metric instead of a
-    // separate count() job per round — read from observedMetrics
-    // directly (not an Observation handle; see ConnectedComponents).
+    // serialize jobs): whether any node is still undecided rides each
+    // round's OWN eager-pin materialization as an observed metric
+    // instead of a separate count() job per round — read from
+    // observedMetrics directly (not an Observation handle; see
+    // ConnectedComponents). A presence flag, max(true), not a count:
+    // a reliable checkpoint's write job re-executes the plan and task
+    // retries re-run it, which can double a count but not a max.
+    def anyUndecided(obs: DataFrame, name: String): Boolean =
+      obs.queryExecution.observedMetrics.get(name)
+        .exists(r => !r.isNullAt(0) && r.getBoolean(0))
     val undObs = edges.select(col("x").as("node")).distinct()
       .withColumn("p", pri(col("node")))
-      .observe("mis_und_0", count(lit(1)).as("n"))
+      .observe("mis_und_0", max(lit(true)).as("any"))
     var und = Pin(undObs, eager = true)
     var pinned = und
     // ONE accumulated output-sized pin for the kept set (round-12
@@ -81,8 +87,8 @@ object Diversity {
     var it = 0
     var succeeded = false
     try {
-      var remaining = undObs.queryExecution.observedMetrics("mis_und_0").getLong(0)
-      while (remaining > 0 && it < maxIter) {
+      var undecided = anyUndecided(undObs, "mis_und_0")
+      while (undecided && it < maxIter) {
         it += 1
         // min (priority, id) among UNDECIDED neighbors
         val nbrMin = edges
@@ -108,9 +114,9 @@ object Diversity {
         val nextObs = und
           .join(sel.select(col("node")), Seq("node"), "left_anti")
           .join(dominated, Seq("node"), "left_anti")
-          .observe(s"mis_round_$it", count(lit(1)).as("n"))
+          .observe(s"mis_round_$it", max(lit(true)).as("any"))
         val next = Pin(nextObs, eager = true)
-        remaining = nextObs.queryExecution.observedMetrics(s"mis_round_$it").getLong(0)
+        undecided = anyUndecided(nextObs, s"mis_round_$it")
         Pin.release(pinned)
         Pin.release(sel)
         selLive = null
@@ -120,7 +126,7 @@ object Diversity {
         pinned = next
         und = next
       }
-      if (remaining != 0)
+      if (undecided)
         throw new IllegalStateException(
           s"independentSet did not converge in $maxIter rounds")
       succeeded = true

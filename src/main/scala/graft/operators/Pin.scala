@@ -41,15 +41,9 @@ object Pin {
     * fails the job unrecoverably; it cannot be recomputed. The bet is
     * that re-running one failed operator invocation is cheaper than a
     * shared-filesystem round-trip of its whole input on EVERY
-    * invocation. A deployment that configured a checkpoint dir
-    * precisely because executors do get lost can veto the bet:
-    * `spark.graft.pin.localEphemeral=false` routes these pins through
-    * [[apply]]'s reliable tier. */
+    * invocation. */
   def local(df: DataFrame, eager: Boolean = false): DataFrame =
-    if (df.sparkSession.conf
-        .get("spark.graft.pin.localEphemeral", "true") == "false")
-      apply(df, eager)
-    else df.localCheckpoint(eager)
+    df.localCheckpoint(eager)
 
   /** Release the block-manager storage behind a pinned DataFrame.
     * Iterative drivers (ConnectedComponents' label loop) pin every

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions.col
   * When — and only when — the scan would run at fewer splits than the
   * session's cores, one doc_id-keyed exchange of the raw rows re-opens
   * parallelism: measured q97 0.92 → 0.38 s, q76 0.84 → 0.48 s at
-  * sf0.1 (ProfileSpread). The condition reads the PLANNED scan
+  * sf0.1. The condition reads the PLANNED scan
   * partition count (not the file count — a few huge multi-row-group
   * files split fine), so a production layout is a no-op: at 100 TB the
   * scan parallelism is already ≥ cores and no full-text shuffle is

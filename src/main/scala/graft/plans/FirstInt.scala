@@ -27,7 +27,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * generator emits small ints), documented as the domain bound.
   *
   * Why native: Java regex over 1M+ `props` strings costs ~2x the
-  * whole parquet scan (measured by graft.ProfileNorm at sf1:
+  * whole parquet scan (measured at sf1:
   * regexp_extract ~0.3-0.6 s steady vs 0.2 s scan floor;
   * get_json_object and from_json are worse). This byte scan is a
   * branch-per-byte codegen loop with zero allocation — digits are

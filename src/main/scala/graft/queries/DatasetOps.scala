@@ -74,41 +74,6 @@ object DatasetOps extends QueryModule {
   private def q56(s: SparkSession, dir: String): DataFrame =
     profile(s, dir).orderBy(col("instance_id"))
 
-  // q56 FUSED single-exchange candidate (round 17): the per-user level
-  // of [[profile]] exists only for the two distinct-user counts, so
-  // one [[graft.plans.UserFlagFold]] (bit 1 = actor event) alongside
-  // the plain per-instance aggregates collapses the family to a single
-  // exchange — the unscaled message-length sum is associative, so it
-  // moves to the instance level unchanged. Output-identical to [[q56]]
-  // (FusedAggSpec); the committed A/B decides which ships.
-  // user_id is NON-NULL in this schema (the same guarantee [[profile]]
-  // leans on): UserFlagFold SKIPS a null user while the two-level form
-  // would count the null-user group row in n_participants/n_actors —
-  // equivalence is conditional on that guarantee, so a schema change
-  // admitting null users must revisit BOTH forms together (round-17
-  // advice — the divergence stated where it lives).
-  private[graft] def q56Fused(s: SparkSession, dir: String): DataFrame =
-    norm(Tables.events(s, dir))
-      .groupBy(col("instance_id"))
-      .agg(
-        count(lit(1)).as("n_events"),
-        count(when(isMsg, lit(1))).as("n_messages"),
-        count(when(isCmd, lit(1))).as("n_commands"),
-        graft.plans.UserFlagFold.fold(col("user_id"),
-          when(isMsg || isCmd, 1).otherwise(0).cast("int"), isMsg).as("_f"),
-        sum(when(isMsg, u2(col("value")))).as("_lenU"))
-      .select(col("instance_id"), col("n_events"), col("n_messages"),
-        col("n_commands"),
-        col("_f.n_users").as("n_participants"),
-        col("_f.n_flag1").as("n_actors"),
-        (col("n_messages") /
-          when(col("n_commands") === 0, lit(null)).otherwise(col("n_commands")))
-          .as("msg_cmd_ratio"),
-        (col("_lenU").cast("double") / lit(100.0) /
-          when(col("n_messages") === 0, lit(null)).otherwise(col("n_messages")))
-          .as("avg_msg_len"))
-      .orderBy(col("instance_id"))
-
   private val q56Sql =
     s"""WITH $NormSql
        |SELECT instance_id,

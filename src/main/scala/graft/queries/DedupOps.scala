@@ -261,10 +261,6 @@ object DedupOps extends QueryModule {
   private def q36(s: SparkSession, dir: String): DataFrame =
     minhashPairs(s, dir).repartition(col("a")).orderBy(col("a"), col("b"))
 
-  /** Test-only accessor for the profile harness (ProfileQ70CC). */
-  private[graft] def minhashPairsForProfile(s: SparkSession, dir: String): DataFrame =
-    minhashPairs(s, dir)
-
   private def minhashPairs(s: SparkSession, dir: String): DataFrame = {
     // The signature table (one slim row per doc, 250x smaller than the
     // shingle stream feeding it) feeds both band-join branches; AQE's
@@ -358,8 +354,8 @@ object DedupOps extends QueryModule {
     // probe stage (the 1.8M-pair EMISSION, the query's dominant cost)
     // streams over those same 1-2 partitions: near-serial. The dial
     // re-opens scan parallelism only when planned splits < cores (a
-    // production layout is a no-op); interleaved A/B (ProfileQ37AB,
-    // 4 rounds): 2.52 → 1.07 s at sf0.1. A SHUFFLE_HASH hint on the
+    // production layout is a no-op); interleaved A/B (4
+    // rounds): 2.52 → 1.07 s at sf0.1. A SHUFFLE_HASH hint on the
     // join measured the same fix (1.13) from the other end — by
     // forcing an exchange that happened to re-parallelize the probe —
     // but overrides the size-based broadcast everywhere; rejected.

@@ -163,31 +163,6 @@ object EventOps extends QueryModule {
       .orderBy(col("instance_id"))
   }
 
-  // q15 FUSED single-exchange candidate (round 17 — the last argued
-  // band row): the two-level form's per-user level exists only to
-  // hold each user's flag bits and message tally, state bounded by an
-  // instance's participants — so it folds into ONE aggregation via
-  // [[graft.plans.UserFlagFold]] (bit 1 = DM-marker event, bit 2 =
-  // author/caster-marker event), dropping the second exchange barrier
-  // at the cost of the scan-side partial leaving whole-stage codegen
-  // (ObjectHashAggregate). Output-identical to [[q15]]
-  // (FusedAggSpec); which ships is decided by the committed sf1/sf10
-  // A/B in BENCH_SF10.md.
-  private[graft] def q15Fused(s: SparkSession, dir: String): DataFrame = {
-    val f = graft.plans.UserFlagFold.fold(
-      col("user_id"),
-      (when(isState, 1).otherwise(0) + when(isCmd, 2).otherwise(0)).cast("int"),
-      isMsg)
-    ev(s, dir)
-      .groupBy(col("instance_id"))
-      .agg(count(when(isMsg, lit(1))).as("n_msgs"), f.as("_f"))
-      .select(col("instance_id"), col("n_msgs"),
-        col("_f.msgs_flagged").as("n_kept"),
-        col("_f.n_flag2").as("n_casters"))
-      .withColumn("single_caster", (col("n_casters") === 1).cast("int"))
-      .orderBy(col("instance_id"))
-  }
-
   private val q15Sql =
     s"""WITH $NormSql,
        |f AS (SELECT *,

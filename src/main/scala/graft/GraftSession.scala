@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.logging.log4j.Level
+import org.apache.logging.log4j.core.config.Configurator
+import org.apache.spark.internal.Logging
 import org.apache.spark.sql.SparkSession
 
 /** Canonical local SparkSession for every graft entry point: UTC,
@@ -7,10 +10,18 @@ import org.apache.spark.sql.SparkSession
   * native expressions), no UI. One definition so the mains and the
   * test session can't drift apart on the configs correctness depends
   * on. */
-object GraftSession {
+object GraftSession extends Logging {
   def local(cores: String, shufflePartitions: String,
             logLevel: String = "WARN"): SparkSession = {
-    val s = SparkSession.builder()
+    // Spark installs its log4j2 defaults (root INFO) on first use: do
+    // that now and apply `logLevel` BEFORE the builder runs, so the
+    // ~40 SparkContext start-up INFO lines are never printed.
+    initializeLogIfNecessary(false)
+    Configurator.setRootLevel(Level.valueOf(logLevel))
+    // Unpersisting a locally checkpointed RDD (every Pin.release) warns
+    // that its lineage is truncated — the trade-off Pin's doc states.
+    Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD", Level.ERROR)
+    SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", shufflePartitions)
       .config("spark.sql.session.timeZone", "UTC")
@@ -41,7 +52,5 @@ object GraftSession {
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256KB")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
-    s.sparkContext.setLogLevel(logLevel)
-    s
   }
 }

@@ -2,56 +2,24 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
 
 /** Exact-arithmetic helpers.
   *
   * Double summation is order-dependent across shuffle partitions, so
-  * every money-ish aggregate casts to DECIMAL *before* SUM: decimal
-  * addition is associative/commutative, which makes results identical
-  * regardless of partitioning — a requirement both for the DuckDB
-  * oracle hash-match and for run-to-run determinism on a real cluster.
+  * every money-ish aggregate sums the exact unscaled int64 of the
+  * DECIMAL value *before* converting: integer addition is
+  * associative/commutative, which makes results identical regardless
+  * of partitioning — a requirement both for the DuckDB oracle
+  * hash-match and for run-to-run determinism on a real cluster.
   */
 object Exact {
-  /** 2-dp money column (source doubles are generated at 2 dp, so this
-    * cast is exact). */
-  def d2(c: Column): Column = c.cast(DecimalType(12, 2))
-
-  /** small 2-dp rate column (discount / tax). */
-  def r2(c: Column): Column = c.cast(DecimalType(4, 2))
-
-  /** price * (1 - discount), exact at scale 4. */
-  def discPrice(price: Column, disc: Column): Column =
-    (d2(price) * (lit(1) - r2(disc))).cast(DecimalType(16, 4))
-
-  /** price * (1 - discount) * (1 + tax), exact at scale 6. */
-  def charge(price: Column, disc: Column, tax: Column): Column =
-    (discPrice(price, disc) * (lit(1) + r2(tax))).cast(DecimalType(18, 6))
-
-  /** Final-output sum of a scale-`scale` decimal column: exact,
-    * order-independent, and FAST — the decimal is lifted to its
-    * unscaled int64 (c·10^scale, exact) and summed as LONG, because
-    * Spark's native decimal SUM widens precision by 10 and any
-    * accumulator over precision 18 falls off the long-backed fast
-    * path onto BigDecimal (~4x the aggregation wall-clock, measured
-    * on q01). The emitted column is DOUBLE so Spark and the DuckDB
-    * oracle print the identical float64; while the unscaled sum is
-    * below 2^53 (10^15 at 2dp — ANSI mode faults loudly on int64
-    * overflow long before results could silently drift) the division
-    * reproduces bit-for-bit the decimal-sum-then-cast value, so
-    * oracle SQL stays CAST(SUM(CAST(...)) AS DOUBLE). */
-  def sumDec(c: Column, scale: Int): Column = {
-    val factor = math.pow(10, scale)
-    sum((c * lit(factor.toLong)).cast("long")).cast("double") / lit(factor)
-  }
-
-  // ---- unscaled-long fast path (round 8) -------------------------------
+  // ---- unscaled-long path (round 8) ------------------------------------
   //
-  // The d2/discPrice/charge → sumDec chain above is EXACT but pays a
-  // per-row Decimal allocation per cast plus a decimal multiply per
-  // arithmetic step — measured 3x the whole-query wall on q01 at sf1
-  // (1.4 s → 0.45 s, the scan floor). For NON-NEGATIVE 2-dp-generated
-  // double sources (all money/length columns in this schema; nothing
+  // The decimal chain it replaced (cast each money column to DECIMAL,
+  // multiply, sum) is EXACT but pays a per-row Decimal allocation per
+  // cast plus a decimal multiply per arithmetic step — measured 3x the
+  // whole-query wall on q01 at sf1 (1.4 s → 0.45 s, the scan floor).
+  // For NON-NEGATIVE 2-dp-generated double sources (all money/length columns in this schema; nothing
   // here is ever negative) the same unscaled integers are reachable
   // with pure double→long codegen:
   //
@@ -65,27 +33,34 @@ object Exact {
   // Products of unscaled ints are the EXACT unscaled values of the
   // decimal products (2dp×2dp is exactly 4dp — no rounding happens in
   // the decimal chain either), so the long sums are bit-identical to
-  // sumDec's and the oracle SQL keeps the decimal form unchanged.
+  // the oracle's decimal sums and the oracle SQL keeps the decimal
+  // form unchanged.
   // round() is NOT used because Spark codegens it as a per-value
   // java.math.BigDecimal.setScale — the allocation this path removes.
 
-  /** Unscaled 2-dp int64 of a non-negative 2-dp double: exact equal to
-    * `d2(c)`'s unscaled value, zero per-row allocations. */
+  /** Unscaled 2-dp int64 of a non-negative 2-dp double: exactly the
+    * unscaled value of the oracle's `CAST(c AS DECIMAL(12,2))`, zero
+    * per-row allocations. */
   def u2(c: Column): Column = (c * lit(100) + lit(0.5)).cast("long")
 
-  /** price·(1−disc) as its exact scale-4 unscaled int64
-    * (== `discPrice`'s unscaled value). */
+  /** price·(1−disc) as its exact scale-4 unscaled int64 (== the
+    * unscaled value of the oracle's
+    * `CAST(price AS DECIMAL(12,2)) * (1 - CAST(disc AS DECIMAL(4,2)))`). */
   def discPriceU(price: Column, disc: Column): Column =
     u2(price) * (lit(100L) - u2(disc))
 
-  /** price·(1−disc)·(1+tax) as its exact scale-6 unscaled int64
-    * (== `charge`'s unscaled value). */
+  /** price·(1−disc)·(1+tax) as its exact scale-6 unscaled int64 (== the
+    * unscaled value of the oracle's decimal product
+    * `… * (1 + CAST(tax AS DECIMAL(4,2)))`). */
   def chargeU(price: Column, disc: Column, tax: Column): Column =
     discPriceU(price, disc) * (lit(100L) + u2(tax))
 
   /** Sum of scale-`scale` unscaled int64s emitted as DOUBLE —
     * bit-identical to the oracle's CAST(SUM(decimal) AS DOUBLE) while
-    * the sum stays exact in float64 (see sumDec's bound). */
+    * the unscaled sum stays below 2^53 (10^15 at 2 dp — ANSI mode
+    * faults loudly on int64 overflow long before results could
+    * silently drift): the division then reproduces bit-for-bit the
+    * decimal-sum-then-cast value. */
   def sumU(c: Column, scale: Int): Column =
     sum(c).cast("double") / lit(math.pow(10, scale))
 

@@ -97,16 +97,13 @@ object PromptFunctions {
         array_join(transform(shorts, s => concat(lit("- "), s)), "\n")))
       .otherwise(lit(""))
 
-  /** [[actorsBlock]]/[[targetsBlock]] over an ALREADY-JOINED string of
+  /** [[actorsBlock]] over an ALREADY-JOINED string of
     * `- `-prefixed lines (the ordered-listagg aggregation path: the
     * aggregate emits the newline-joined block body directly, so no
     * struct array is ever built or sorted post-hoc). NULL/empty →
     * empty block, like the array forms. */
-  def actorsBlockOfJoined(joined: Column): Column = joinedBlock("Actors:", joined)
-  def targetsBlockOfJoined(joined: Column): Column = joinedBlock("Targets:", joined)
-
-  private def joinedBlock(header: String, joined: Column): Column =
-    when(nonEmpty(joined), concat(lit(header + "\n"), joined)).otherwise(lit(""))
+  def actorsBlockOfJoined(joined: Column): Column =
+    when(nonEmpty(joined), concat(lit("Actors:\n"), joined)).otherwise(lit(""))
 
   /** `History:\n<utterances>\n---`, empty when no history
     * (prompts.py:146-149). */
@@ -177,15 +174,4 @@ object PromptFunctions {
   /** [[staNarCompletion]] over the already-joined utterance string. */
   def staNarCompletionOfJoined(joined: Column): Column =
     concat(joined, lit(StopSeq))
-
-  /** IC/OOC classifier finetune pair (reference:
-    * icooc/finertune_prep.py:24-33): numeric label 0 → in-character,
-    * else out-of-character; prompt `<utterance>\nlabel:`, completion
-    * ` <label>` (leading space included, as the reference writes it). */
-  def icOocPrompt(utterance: Column): Column =
-    concat(utterance, lit("\nlabel:"))
-
-  def icOocCompletion(label: Column): Column =
-    concat(lit(" "),
-      when(label.cast("int") === 0, "in-character").otherwise("out-of-character"))
 }

@@ -74,14 +74,4 @@ object VectorFunctions {
     * corpus has no zero vectors), so cross-engine hashes are untouched. */
   def cosineWithNorms(a: Column, na: Column, b: Column, nb: Column): Column =
     when(na === 0.0 || nb === 0.0, lit(0.0)).otherwise(dotQ(a, b) / (na * nb))
-
-  /** Plain double dot product (for rows-only checked paths where
-    * cross-engine bit-exactness is not required — ~4x cheaper). */
-  def dotDouble(a: Column, b: Column): Column =
-    aggregate(
-      zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
-      lit(0.0), (acc, v) => acc + v)
-
-  def cosineDouble(a: Column, b: Column): Column =
-    dotDouble(a, b) / (sqrt(dotDouble(a, a)) * sqrt(dotDouble(b, b)))
 }

@@ -34,8 +34,7 @@ object Multimodal {
   val FeatureDim = 8
   val BatchSize = 32
 
-  /** Aspect-preserving integer fit shared by BOTH resize paths (stub
-    * and decoded — the scaladoc promises they agree): the larger edge
+  /** Aspect-preserving integer fit of the image resize: the larger edge
     * lands EXACTLY on maxDim, the smaller scales by the same ratio
     * (floor, min 1) — deterministic, no float accumulation. */
   private def fitDims(width: Int, height: Int, maxDim: Int): (Int, Int) =
@@ -202,46 +201,9 @@ object Multimodal {
         }
       } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** ===================== STUB (decode) =====================
-    * Image resize for image rows: recomputes the metadata exactly
-    * (aspect-preserving fit into `maxDim` — the part a real pipeline
-    * must get right for downstream batch shapes) and stands in the
-    * pixel transform with a deterministic payload fold, batched per
-    * partition like [[extractFeatures]] so a real codec session
-    * initializes once per partition. Non-image rows pass through
-    * untouched — resize is a per-kind transform, not a filter.
-    * ========================================================= */
-  /** STUB batch transform mirroring [[decodeBatchStub]]'s shape: a
-    * real implementation resamples the whole batch through one codec
-    * session; the fake folds each payload deterministically. */
-  private def resizeBatchStub(batch: Seq[MediaRecord], maxDim: Int): Seq[MediaRecord] =
-    batch.map { r =>
-      if (r.kind != "image" || r.width <= 0 || r.height <= 0 || r.payload.isEmpty ||
-          (r.width <= maxDim && r.height <= maxDim)) r
-      else {
-        val (w, h) = fitDims(r.width, r.height, maxDim)
-        val out = new Array[Byte](math.max(1, r.payload.length / 4))
-        var i = 0
-        while (i < out.length) {
-          out(i) = (r.payload(i % r.payload.length) ^ (w + h * 31)).toByte
-          i += 1
-        }
-        r.copy(payload = out, width = w, height = h)
-      }
-    }
-
-  def resizeImages(media: Dataset[MediaRecord], maxDim: Int): Dataset[MediaRecord] = {
-    val spark = media.sparkSession
-    import spark.implicits._
-    require(maxDim > 0, "maxDim must be positive")
-    media.mapPartitions { it =>
-      it.grouped(BatchSize).flatMap(resizeBatchStub(_, maxDim))
-    }
-  }
-
   /** REAL image resize (no stub): decode via the JDK's ImageIO,
-    * bilinear resample into the same aspect-preserving integer fit as
-    * [[resizeImages]] (larger edge exactly maxDim), re-encode as PNG
+    * bilinear resample into the aspect-preserving integer fit of
+    * [[fitDims]] (larger edge exactly maxDim), re-encode as PNG
     * (lossless — a repeated resize to the same maxDim is a no-op on
     * the DIMENSIONS, which is what downstream batch shapes key on).
     * Undecodable payloads and non-image rows pass through untouched.

@@ -257,46 +257,15 @@ object BpeTrain {
     * the concatenated token stream. The merge table is INLINED into
     * the expression tree (one `aggregate` per merge — the
     * ivfLearned literal-core precedent), so this is the bounded-
-    * merge-list path: fine for the spec/eval scale it serves; a
-    * production encoder with 10k+ merges would iterate the same
-    * fold as `rounds` distributed passes instead of one expression. */
+    * merge-list path: fine for the spec/eval scale it serves, and the
+    * reference [[encodeBulk]] (the production encoder for 10k+ merges)
+    * is spec-pinned against. */
   def encode(text: Column, merges: Seq[(Int, String, String, String)]): Column =
     flatten(transform(
       filter(split(trim(text), " "), w => length(w) > 0),
       w => merges.sortBy(_._1).foldLeft(charSyms(w)) {
         case (acc, (_, a, b, _)) => mergeSyms(acc, lit(a), lit(b))
       }))
-
-  /** The PRODUCTION encoder shape for large merge tables: instead of
-    * inlining every merge into one expression tree ([[encode]] —
-    * fine for bounded tables, but 10k+ nested `aggregate`s would sink
-    * codegen), apply the merges as `rounds` ITERATIVE projections
-    * over a staged symbol-array column — each pass one stateless map,
-    * vocabulary-agnostic, with the [[ConnectedComponents]]
-    * pin/release keeping lineage flat (an unpinned 10k-deep
-    * expression lineage is its own stack overflow). Emits
-    * (original columns..., tokens array<string>); exactly equal to
-    * [[encode]] by construction (same fold, spec-pinned). */
-  def encodeIter(docs: DataFrame, textCol: String,
-                 merges: Seq[(Int, String, String, String)],
-                 pinEvery: Int = 64): DataFrame = {
-    val words = filter(split(trim(col(textCol)), " "), w => length(w) > 0)
-    var cur = docs.withColumn("__syms",
-      transform(words, w => charSyms(w)))
-    var sincePin = 0
-    for ((_, a, b, _) <- merges.sortBy(_._1)) {
-      cur = cur.withColumn("__syms",
-        transform(col("__syms"), s => mergeSyms(s, lit(a), lit(b))))
-      sincePin += 1
-      if (sincePin >= pinEvery) {
-        val pinned = Pin(cur, eager = true)
-        Pin.release(cur)
-        cur = pinned
-        sincePin = 0
-      }
-    }
-    cur.withColumn("tokens", flatten(col("__syms"))).drop("__syms")
-  }
 
   /** Encode ONE word against a rank-indexed merge table with the
     * candidate-heap algorithm (what sentencepiece/HF tokenizers
@@ -305,8 +274,8 @@ object BpeTrain {
     * push the ranks of newly-formed pairs if they rank AFTER the
     * current one. Pops are therefore strictly rank-ascending and a
     * pair formed after its own rank has passed is never applied —
-    * EXACTLY the sequential in-rank-order semantics of [[encode]] /
-    * [[encodeIter]], in O(pairs·log) per word instead of O(table).
+    * EXACTLY the sequential in-rank-order semantics of [[encode]],
+    * in O(pairs·log) per word instead of O(table).
     *
     * `rankOf` maps a pair to ALL its ranks, not the last one: a
     * trained table CAN contain the same pair twice (after (a,b) is
@@ -360,16 +329,15 @@ object BpeTrain {
 
   /** The PRODUCTION encoder for LARGE merge tables. [[encode]]
     * inlines one `aggregate` per merge into the expression tree
-    * (bounded tables only) and [[encodeIter]] runs one projection
-    * pass per merge — the right shape up to a few hundred merges,
-    * but a 32k-merge production vocabulary would be 32k sequential
-    * passes over the corpus. This path is ONE pass: broadcast the
+    * (bounded tables only), and one projection pass per merge costs
+    * a corpus pass per merge (392 s for a 64-merge prefix over 500k
+    * docs, BENCH_SF10.md). This path is ONE pass: broadcast the
     * rank-indexed merge table, `mapPartitions` (the media-decode /
     * external-scorer precedent — genuine per-row imperative logic,
     * a data-dependent merge loop no fixed-depth expression can
     * express), and per word run [[encodeWord]]'s candidate-heap
     * replay of the in-rank-order semantics — spec-pinned equal to
-    * [[encode]]/[[encodeIter]]. Emits (idCol, tokens). */
+    * [[encode]]. Emits (idCol, tokens). */
   def encodeBulk(docs: DataFrame, idCol: String, textCol: String,
                  merges: Seq[(Int, String, String, String)]): DataFrame = {
     val spark = docs.sparkSession
@@ -385,7 +353,7 @@ object BpeTrain {
       .mapPartitions { it =>
         val (rk, br) = bc.value
         it.map { case (id, text) =>
-          // NULL text stays NULL (encode/encodeIter propagate NULL
+          // NULL text stays NULL (encode propagates NULL
           // through split/trim/flatten — an empty array would be a
           // silent divergence from the spec-pinned equality);
           // trimSpaces, NOT String.trim: the word stream must split

@@ -38,7 +38,7 @@ import graft.plans.{PqAdc, PqCodes, PqLut, PqPack, PqReconErr}
   * DuckDB oracle row (q103, over the [[modelFromRows]] deterministic
   * codebook); the k-means-trained path and ADC recall are spec-gated
   * (PqSpec: full-probe recall ≥ 0.8 vs exact L2 on planted clusters;
-  * SoakIvfPq: scale data point + 32x size cut).
+  * the IvfPq soak: scale data point + 32x size cut).
   */
 object Pq {
 
@@ -61,7 +61,7 @@ object Pq {
   /** Coarse-codebook size at which the inlined-literal assignment
     * gives way to the broadcast-join shape. Much lower than
     * [[Similarity.LargeCodebookCells]] (the codegen-LIMIT bound):
-    * SoakIvfPq measured the literal path at 256 cells costing ~80 s
+    * the IvfPq soak measured the literal path at 256 cells costing ~80 s
     * per 200k-row pass (the generated 256-struct array_sort loses
     * whole-stage codegen) where the join + min-struct aggregation
     * shape does the identical assignment in ~5 s. Both shapes share
@@ -170,13 +170,6 @@ object Pq {
       .select(col("query_id"), col("vec_id").as("neighbor_id"), col("adist"))
   }
 
-  /** [[searchAdcIndex]] with the index built inline (the spec/soak
-    * convenience; deployment encodes once and persists). */
-  def searchAdc(corpus: DataFrame, model: PqModel, queryPred: Column,
-                k: Int, probes: Int = 2): DataFrame =
-    searchAdcIndex(encode(corpus, model).select(col("vec_id"), col("cell"), col("pq")),
-      corpus, model, queryPred, k, probes)
-
   /** ADC + EXACT REFINE (the FAISS IVFPQR shape): ADC shortlists
     * `shortlist` candidates per query from the compressed index, then
     * the shortlist ALONE joins back to the full vectors for an exact
@@ -191,7 +184,7 @@ object Pq {
     * cutoff is a `rank()` over adist ALONE, so a code-tie group
     * straddling the boundary is admitted WHOLE — which is exactly the
     * failure mode a larger hand-picked shortlist existed to cover
-    * (SoakIvfPq at 200k vectors / 512 planted clusters: recall@5 =
+    * (the IvfPq soak at 200k vectors / 512 planted clusters: recall@5 =
     * 0.70 at a row_number cut of 200 < the ~390-member tie groups,
     * 0.96 only once a hand-tuned 800 covered them). With the tie
     * extension, `shortlist = k` (the default, sentinel 0) already
@@ -213,7 +206,7 @@ object Pq {
       corpus, model, queryPred, k, probes, shortlist,
       // auto mode: this convenience path holds the full corpus, so it
       // measures the radius bound itself — a FULL CORPUS PASS PER
-      // CALL (5.9 s at 200k vectors, SoakIvfPq). Fine once; a loop
+      // CALL (5.9 s at 200k vectors, the IvfPq soak). Fine once; a loop
       // over query batches must not pay it repeatedly — build the
       // index once ([[buildIndex]], which stores the radius as the
       // sidecar) and loop over [[searchIndex]], or compute

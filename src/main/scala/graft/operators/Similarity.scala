@@ -591,7 +591,7 @@ object Similarity {
     * bit-for-bit. Partial coarse probing is approximate at the
     * ASSIGNMENT level (a vector's true nearest fine centroid can live
     * in an unprobed coarse cell); recall vs brute force is
-    * spec-measured on planted clustered data and soaked in SoakAnn. */
+    * spec-measured on planted clustered data and soaked in `graft.Soak Ann`. */
   private[graft] def ivfTwoLevelSearch(n: DataFrame, fineCents: DataFrame,
       queryPred: Column, k: Int, probes: Int,
       coarseCells: Int, coarseProbes: Int, seed: Long = 42L): DataFrame = {

@@ -290,7 +290,7 @@ object SimilarityOps extends QueryModule {
   // corpus rows, coarse = the q41 centroid rows) so the whole encode
   // is cross-engine reproducible SQL; the k-means-trained model and
   // the ADC search path are spec-gated (PqSpec), their recall soaked
-  // (SoakIvfPq). Long output (vec_id, cell, j, code): one row per
+  // (the IvfPq soak). Long output (vec_id, cell, j, code): one row per
   // subspace — no pivot, exact BIGINTs end to end.
   private val PqM = 4           // 4 subspaces × 16 dims
   private val NumCodewords = 16 // PQ codebook rows: vec_id < 16

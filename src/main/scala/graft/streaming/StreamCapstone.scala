@@ -14,8 +14,8 @@ import graft.queries.PipelineOps
   * [[PipelineOps.incrementalStep]] inside `foreachBatch`; every
   * micro-batch is a DELTA against the persisted base indexes, its
   * survivors append to the output table, its q71 contamination hits
-  * to the quarantine table, and its index delta GROWS the base
-  * indexes so the next batch dedups against everything before it.
+  * to the quarantine table, and its index delta APPENDS to the base
+  * index tables so the next batch dedups against everything before it.
   *
   * Why foreachBatch and not a pure streaming plan: the capstone's
   * dedup semantics are cluster-keyed (connected components + min-id
@@ -26,19 +26,7 @@ import graft.queries.PipelineOps
   * resume) wraps a batch-exact core, so the stream's cumulative
   * output equals the batch incremental run over the union of deltas
   * (StreamingSpec replays micro-batches and asserts set-equality).
-  *
-  * Index growth: each batch's delta is unioned in and PINNED (O(1)
-  * lineage — without the pin, batch k's plan would re-derive every
-  * prior delta's decon pipeline); the superseded pin is released
-  * after the new one materializes, so resident state is exactly one
-  * fp set + one band set. At deployment the same delta rows instead
-  * APPEND to the bucketed index tables
-  * ([[PipelineOps.appendBaseIndexes]] over the
-  * [[PipelineOps.persistBaseIndexes]] tables) and the nightly
-  * [[PipelineOps.compactBaseIndexes]] job rewrites the accumulated
-  * file sets and swaps the catalog names — the in-memory union here
-  * is the single-process form of the same contract
-  * (OrderPipelineSpec pins append → compact → identical output). Batches must arrive with ids above all base ids (the
+  * Batches must arrive with ids above all base ids (the
   * [[PipelineOps.incrementalCapstone]] contract; Firehose delivery
   * ids are monotone by construction).
   */
@@ -48,61 +36,14 @@ object StreamCapstone {
     * (doc_id bigint, text string); `bench` the held-out benchmark
     * docs (static, tiny). Survivor rows (doc_id, clean_text, batch_id)
     * append under `outPath`; quarantine rows (doc_id, batch_id) under
-    * `quarantinePath`. */
-  def incrementalCapstoneStream(
-      docs: DataFrame,
-      base: PipelineOps.BaseIndexes,
-      bench: DataFrame,
-      outPath: String,
-      quarantinePath: String,
-      checkpointDir: String): StreamingQuery = {
-    require(docs.isStreaming, "docs must be a streaming DataFrame")
-    val spark = docs.sparkSession
-    // static per-stream constants: the q71 benchmark hash set (tiny)
-    val benchH = Pin(StreamClean.benchHashes(bench), eager = true)
-    var idx = base
-    docs.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val raw = batch.select(col("doc_id"), col("text"))
-          .transform(Pin(_)) // read the batch's files once, not per stage
-        val (surv, delta) = PipelineOps.incrementalStep(idx, raw, bench)
-        surv.withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(outPath)
-        raw
-          .select(col("doc_id"),
-            explode(graft.plans.ShingleHashes(trim(col("text")), 5, Dedup.P)).as("h"))
-          .join(broadcast(benchH), Seq("h"))
-          .select(col("doc_id")).distinct()
-          .withColumn("batch_id", lit(batchId))
-          .write.mode("append").parquet(quarantinePath)
-        // grow the indexes: pin the unions (O(1) lineage), then drop
-        // every other pinned block — the superseded index, this
-        // batch's raw pin, and incrementalStep's internal decon/sig
-        // pins, none of which the next batch can reference. The
-        // stream owns the session's pin hygiene while running (the
-        // Bench/Verify releaseQueryState discipline, with a keep-set).
-        val grown = PipelineOps.BaseIndexes(
-          Pin(idx.rawFp.unionByName(delta.rawFp), eager = true),
-          Pin(idx.deconBands.unionByName(delta.deconBands), eager = true))
-        val keep = Seq(benchH, grown.rawFp, grown.deconBands)
-          .flatMap(pinnedRddIds).toSet
-        spark.sparkContext.getPersistentRDDs
-          .filterNot { case (id, _) => keep(id) }
-          .values.foreach(_.unpersist(blocking = false))
-        idx = grown
-        ()
-      }
-      .start()
-  }
-
-  /** The DEPLOYMENT form (round 15): base indexes live as the
-    * PERSISTED bucketed tables ([[PipelineOps.persistBaseIndexes]]'s
+    * `quarantinePath`.
+    *
+    * Base indexes live as the PERSISTED bucketed tables ([[PipelineOps.persistBaseIndexes]]'s
     * `prefix`), and each micro-batch's index delta APPENDS to them
-    * ([[PipelineOps.appendBaseIndexes]]) instead of growing an
-    * in-memory union. Per-batch resident state is just the batch's
-    * own pins — the 5M-doc soak measured the in-memory form re-pinning
-    * the full 45M-row union at ~85 s PER BATCH; here a batch pays
+    * ([[PipelineOps.appendBaseIndexes]]). Per-batch resident state is
+    * just the batch's own pins — the 5M-doc soak measured the removed
+    * in-memory form (an index union re-pinned per batch) at ~85 s PER
+    * BATCH on the full 45M-row union; here a batch pays
     * delta-sized work + two bucketed probes + a delta-sized append,
     * flat at any base size, and the nightly
     * [[PipelineOps.compactBaseIndexes]] job keeps the file counts

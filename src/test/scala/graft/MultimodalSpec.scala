@@ -50,22 +50,25 @@ class MultimodalSpec extends SparkTestBase {
 
   test("resize fits images into maxDim preserving aspect; non-images pass through") {
     import spark.implicits._
+    val land = pngBytes(192, 108)((x, y) => (x * 7 + y) & 0xFFFFFF)
+    val port = pngBytes(108, 192)((x, y) => (x + y * 7) & 0xFFFFFF)
+    val fits = pngBytes(10, 10)((_, _) => 0x123456)
     val rows = Seq(
-      MediaRecord(1L, "image", Array.tabulate(64)(_.toByte), 1920, 1080, 0L),
-      MediaRecord(2L, "image", Array.tabulate(64)(_.toByte), 1080, 1920, 0L),
-      MediaRecord(3L, "image", Array.tabulate(64)(_.toByte), 100, 100, 0L), // already fits
+      MediaRecord(1L, "image", land, 192, 108, 0L),
+      MediaRecord(2L, "image", port, 108, 192, 0L),
+      MediaRecord(3L, "image", fits, 10, 10, 0L), // already fits
       MediaRecord(4L, "audio", Array.tabulate(64)(_.toByte), 0, 0, 9000L))
-    val out = Multimodal.resizeImages(spark.createDataset(rows).repartition(2), 512)
+    val out = Multimodal.resizeImagesDecoded(spark.createDataset(rows).repartition(2), 64)
       .collect().sortBy(_.mediaId)
     // landscape: width lands exactly on maxDim, height scales by the ratio
-    assert(out(0).width == 512 && out(0).height == 1080 * 512 / 1920)
+    assert(out(0).width == 64 && out(0).height == 108 * 64 / 192)
     // portrait: mirrored
-    assert(out(1).height == 512 && out(1).width == 1080 * 512 / 1920)
+    assert(out(1).height == 64 && out(1).width == 108 * 64 / 192)
     // already-fitting image and non-image rows pass through untouched
-    assert(out(2).width == 100 && out(2).payload.sameElements(rows(2).payload))
+    assert(out(2).width == 10 && out(2).payload.sameElements(rows(2).payload))
     assert(out(3).durationMs == 9000L && out(3).payload.sameElements(rows(3).payload))
-    // resized payload is the stub transform, deterministic across runs
-    val again = Multimodal.resizeImages(spark.createDataset(rows).repartition(2), 512)
+    // resized payload is deterministic across runs
+    val again = Multimodal.resizeImagesDecoded(spark.createDataset(rows).repartition(2), 64)
       .collect().sortBy(_.mediaId)
     assert(out.zip(again).forall { case (a, b) => a.payload.sameElements(b.payload) })
   }

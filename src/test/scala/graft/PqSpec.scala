@@ -52,7 +52,8 @@ class PqSpec extends SparkTestBase {
     val model = Pq.modelFromRows(emb, col("vec_id") < 8, col("vec_id") < ksub, m)
     val dsub = Dim / m
     // full probe so every (query, candidate) pair surfaces
-    val got = Pq.searchAdc(emb, model, col("vec_id") < 3, k = 5,
+    val index = Pq.encode(emb, model).select(col("vec_id"), col("cell"), col("pq"))
+    val got = Pq.searchAdcIndex(index, emb, model, col("vec_id") < 3, k = 5,
       probes = model.coarse.size)
       .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(3)).toMap
     assert(got.nonEmpty)
@@ -137,7 +138,7 @@ class PqSpec extends SparkTestBase {
   test("auto shortlist (tie band + error band): recall >= 0.95 with no hand-picked constant") {
     // 16 clusters of 125 members — within-cluster candidates ADC
     // cannot order (near-equal adist), the exact shape that forced
-    // SoakIvfPq's hand-tuned shortlist=800. Default shortlist (auto):
+    // the IvfPq soak's hand-tuned shortlist=800. Default shortlist (auto):
     // the rank() cut admits exact-tie groups whole, and the
     // reconstruction-radius error band (sqrt(adist) <= sqrt(adist_k)
     // + 2·sqrt(reconErrMax)) provably admits every possible true

@@ -126,13 +126,17 @@ class PromptSpec extends SparkTestBase {
   }
 
   test("ic/ooc finetune pair matches icooc/finertune_prep.py:24-33") {
-    val df = Seq(("Hello there!", 0.0), ("ooc chatter", 1.0))
-      .toDF("utterance", "label")
-      .select(P.icOocPrompt($"utterance").as("p"), P.icOocCompletion($"label").as("c"))
-      .collect()
-    assert(df(0).getString(0) == "Hello there!\nlabel:")
-    assert(df(0).getString(1) == " in-character")
-    assert(df(1).getString(1) == " out-of-character")
+    // q101 emits the pair: prompt `<utterance>\nlabel:`, completion
+    // ` <label>` with the leading space the reference writes
+    val rows = SparkEntry.queries("q101_icooc_finetune")(spark, sfDir).collect()
+    val texts = Tables.documents(spark, sfDir)
+      .select($"doc_id", $"text").as[(Long, String)].collect().toMap
+    assert(rows.nonEmpty)
+    rows.foreach { r =>
+      val t = texts(r.getLong(0))
+      assert(r.getString(1) == (if (t == null) null else t + "\nlabel:"))
+      assert(Set(" in-character", " out-of-character")(r.getString(2)))
+    }
   }
 
   test("q62 assembles sta_nar prompts with the template skeleton") {

@@ -580,7 +580,9 @@ class StreamingSpec extends SparkTestBase {
       (2001L -> ws("alpha", 40))).toDF("doc_id", "text")
     val d1 = Seq(
       5001L -> ws("alpha", 40),  // exact dup of base -> drop
-      5002L -> ws("gamma", 40))  // fresh -> keep, must be indexed
+      5002L -> ws("gamma", 40),  // fresh -> keep, must be indexed
+      5003L -> (ws("fresh", 20) + " " + benchText.take(60) + " " + ws("tail", 20))
+    )                            // contaminated -> keep stripped + quarantine
     val d2 = Seq(
       6001L -> ws("gamma", 40),  // cross-batch exact dup of 5002 -> drop
       6002L -> ((1 to 38).map(i => s"gamma$i") ++ Seq("qq1", "qq2")).mkString(" "),
@@ -610,8 +612,14 @@ class StreamingSpec extends SparkTestBase {
       assert(got == batch,
         s"persisted stream != batch-over-union: only-stream=${(got -- batch).map(_._1)}, " +
           s"only-batch=${(batch -- got).map(_._1)}")
-      assert(got.map(_._1) == Set(5002L, 6003L), s"kept: ${got.map(_._1)}")
-      // the TABLES grew by each batch's delta (5002's and 6003's rows)
+      assert(got.map(_._1) == Set(5002L, 5003L, 6003L), s"kept: ${got.map(_._1)}")
+      val d3 = got.find(_._1 == 5003L)
+      assert(d3.isDefined && !d3.get._2.contains(benchText.take(45)),
+        "contaminated doc must survive with its spans stripped")
+      val quarantined = spark.read.parquet(s"$tmp/quarantine")
+        .select(col("doc_id")).as[Long].collect().toSet
+      assert(quarantined == Set(5003L), s"quarantine: $quarantined")
+      // the TABLES grew by each batch's delta (its survivors' rows)
       assert(spark.table(s"${prefix}_rawfp").count() > fp0,
         "fp table did not grow")
       assert(spark.table(s"${prefix}_bands").count() > bands0,
@@ -620,62 +628,5 @@ class StreamingSpec extends SparkTestBase {
       spark.sql(s"DROP TABLE IF EXISTS ${prefix}_rawfp")
       spark.sql(s"DROP TABLE IF EXISTS ${prefix}_bands")
     }
-  }
-
-  test("streaming incremental capstone equals batch incremental over the union of deltas") {
-    implicit val ctx = spark.sqlContext
-    import spark.implicits._
-    import graft.queries.PipelineOps
-    def ws(seed: String, n: Int) = (1 to n).map(i => s"$seed$i").mkString(" ")
-    val benchText = "the held out benchmark passage with forty plus " +
-      "characters of exact evaluation text content appearing verbatim here"
-    val bench = Seq((-1L, benchText)).toDF("doc_id", "text")
-    val base = ((1 to 20).map(i => (1000L + i) -> ws(s"b$i ", 40)) :+
-      (2001L -> ws("alpha", 40))).toDF("doc_id", "text")
-
-    val d1 = Seq(
-      5001L -> ws("alpha", 40),  // exact dup of base -> drop
-      5002L -> ws("gamma", 40),  // fresh -> keep
-      5003L -> (ws("fresh", 20) + " " + benchText.take(60) + " " + ws("tail", 20))
-    )                            // contaminated -> keep stripped + quarantine
-    val d2 = Seq(
-      6001L -> ws("gamma", 40),  // CROSS-BATCH exact dup of 5002 -> drop
-      6002L -> ((1 to 38).map(i => s"gamma$i") ++ Seq("qq1", "qq2")).mkString(" "),
-      //                         cross-batch NEAR dup of 5002 -> band probe drop
-      6003L -> ws("delta", 40)   // fresh -> keep
-    )
-
-    val tmp = java.nio.file.Files.createTempDirectory("graft_scap").toString
-    val idx = PipelineOps.baseIndexes(base, bench)
-    val input = MemoryStream[(Long, String)]
-    val q = graft.streaming.StreamCapstone.incrementalCapstoneStream(
-      input.toDF().toDF("doc_id", "text"), idx, bench,
-      s"$tmp/out", s"$tmp/quarantine", s"$tmp/ckpt")
-    try {
-      input.addData(d1: _*); q.processAllAvailable()
-      input.addData(d2: _*); q.processAllAvailable()
-    } finally q.stop()
-
-    val got = spark.read.parquet(s"$tmp/out")
-      .select(col("doc_id"), col("clean_text"))
-      .as[(Long, String)].collect().toSet
-    val batch = PipelineOps.incrementalCapstone(
-      PipelineOps.baseIndexes(base, bench), (d1 ++ d2).toDF("doc_id", "text"), bench)
-      .as[(Long, String)].collect().toSet
-    assert(got == batch,
-      s"stream != batch-over-union: only-stream=${(got -- batch).map(_._1)}, " +
-        s"only-batch=${(batch -- got).map(_._1)}")
-    val keptIds = got.map(_._1)
-    assert(keptIds.contains(5002L) && keptIds.contains(6003L))
-    assert(!keptIds.contains(5001L), "exact dup of base survived")
-    assert(!keptIds.contains(6001L), "cross-batch exact dup survived")
-    assert(!keptIds.contains(6002L), "cross-batch near-dup survived the band probe")
-    val d3 = got.find(_._1 == 5003L)
-    assert(d3.isDefined && !d3.get._2.contains(benchText.take(45)),
-      "contaminated doc must survive with its spans stripped")
-
-    val quarantined = spark.read.parquet(s"$tmp/quarantine")
-      .select(col("doc_id")).as[Long].collect().toSet
-    assert(quarantined == Set(5003L), s"quarantine: $quarantined")
   }
 }

@@ -280,24 +280,6 @@ class TextOpsSpec extends SparkTestBase {
     assert(r((4L, 1L)) == (("banana", 1L, 3L, 0L)))
   }
 
-  test("bpe iterative encoder equals the inline encoder") {
-    import spark.implicits._
-    import graft.operators.BpeTrain
-    val text = (Seq.fill(5)("low") ++ Seq.fill(2)("lower") ++
-      Seq.fill(6)("newest") ++ Seq.fill(3)("widest")).mkString(" ")
-    val d = Seq((1L, text)).toDF("doc_id", "text")
-    val merges = BpeTrain.train(d, 3)
-    val docs = Seq((1L, "newest low"), (2L, "widest lowest")).toDF("doc_id", "text")
-    val inline = docs.select(col("doc_id"),
-      BpeTrain.encode(col("text"), merges).as("tokens"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-    // pinEvery=2 forces the pin/release path inside 3 merges
-    val iter = BpeTrain.encodeIter(docs, "text", merges, pinEvery = 2)
-      .select("doc_id", "tokens")
-      .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-    assert(iter == inline, s"iter $iter != inline $inline")
-  }
-
   test("bpe trainLocal equals the distributed train: hand example") {
     import spark.implicits._
     import graft.operators.BpeTrain
@@ -370,12 +352,12 @@ class TextOpsSpec extends SparkTestBase {
     val probe = ws.grouped(30).zipWithIndex
       .map { case (g, i) => (i.toLong, g.mkString(" ")) }.toSeq
       .toDF("doc_id", "text")
-    val it2 = BpeTrain.encodeIter(probe, "text", m2, pinEvery = 8)
-      .select("doc_id", "tokens")
+    val in2 = probe.select(col("doc_id"),
+      BpeTrain.encode(col("text"), m2).as("tokens"))
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
     val bk2 = BpeTrain.encodeBulk(probe, "doc_id", "text", m2)
       .collect().map(r => r.getLong(0) -> r.getSeq[String](1)).toMap
-    assert(bk2 == it2, s"bulk != iter on randomized corpus")
+    assert(bk2 == in2, s"bulk != inline on randomized corpus")
   }
 
   test("bpe local paths match distributed semantics on the review's edge cases") {

@@ -21,6 +21,12 @@ object GraftSession extends Logging {
     // Unpersisting a locally checkpointed RDD (every Pin.release) warns
     // that its lineage is truncated — the trade-off Pin's doc states.
     Configurator.setLevel("org.apache.spark.rdd.MapPartitionsRDD", Level.ERROR)
+    // Every streaming query warns twice that it runs without AQE, which
+    // this session enables for its batch queries.
+    Configurator.setLevel(
+      "org.apache.spark.sql.execution.streaming.runtime.ResolveWriteToStream", Level.ERROR)
+    Configurator.setLevel(
+      "org.apache.spark.sql.execution.streaming.runtime.MicroBatchExecution", Level.ERROR)
     SparkSession.builder()
       .master(s"local[$cores]")
       .config("spark.sql.shuffle.partitions", shufflePartitions)

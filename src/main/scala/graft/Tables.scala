@@ -1,6 +1,10 @@
 package graft
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Typed loaders for the driver-generated synthetic tables
   * (TPC-H-ish star schema + `events` stream + `documents`/`embeddings`).
@@ -9,6 +13,15 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * dataset/utils.py:combat_dir_iterator — a directory of event files is
   * the unit of input), re-expressed as parquet scans so Catalyst gets
   * predicate pushdown + column pruning for free.
+  *
+  * Each table's schema is resolved once per session and path: an
+  * unhinted `spark.read.parquet` runs a schema-merge Spark job on
+  * every call, before the query's own jobs. Later loads read with the
+  * cached schema, and every call still returns a fresh relation (new
+  * expression ids, so self-joins analyze). The cache keeps the schema,
+  * never the DataFrame, and an entry holds only while the path's file
+  * listing (leaf names, sizes, modification times) is unchanged, so a
+  * table rewritten in place re-resolves on its next load.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -24,7 +37,42 @@ object Tables {
       // MICROS files). EventFunctions.norm then branches on the read
       // schema so either encoding yields identical int64 µs.
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val files = listing(spark, path)
+    val bySession = schemas.synchronized(
+      schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap[String, (Listing, StructType)]()))
+    Option(bySession.get(path)) match {
+      case Some((`files`, schema)) => spark.read.schema(schema).parquet(path)
+      case _ =>
+        val df = spark.read.parquet(path)
+        bySession.put(path, (files, df.schema))
+        df
+    }
+  }
+
+  /** (leaf path, length, modification time) of every file of a table. */
+  private type Listing = Seq[(String, Long, Long)]
+
+  // Weak session keys: a stopped session's entry is collectable.
+  private val schemas =
+    new java.util.WeakHashMap[SparkSession, ConcurrentHashMap[String, (Listing, StructType)]]()
+
+  /** The listing of `path` (the file itself for a single-file table);
+    * empty when the path does not exist, so the read reports it as
+    * Spark does. */
+  private def listing(spark: SparkSession, path: String): Listing = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(p)) Nil
+    else {
+      val it = fs.listFiles(p, true)
+      val files = Seq.newBuilder[(String, Long, Long)]
+      while (it.hasNext) {
+        val f = it.next()
+        files += ((f.getPath.toString, f.getLen, f.getModificationTime))
+      }
+      files.result().sorted
+    }
   }
 
   def region(s: SparkSession, d: String): DataFrame     = load(s, d, "region")

@@ -8,7 +8,8 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   * expressions with the session function registry so SQL text can use
   * them (`SELECT quantized_dot(a, b)`), not just the DataFrame API,
   * and graft's optimizer rules (banded rewrite of keyless
-  * time-proximity joins).
+  * time-proximity joins; at runtime, small global sorts on one
+  * partition).
   *
   * Activate with
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
@@ -26,5 +27,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         QuantizedDotProduct(children.head, children(1))
       }))
     ext.injectOptimizerRule(_ => BandedRangeJoinRule)
+    ext.injectRuntimeOptimizerRule(_ => SmallSortRule)
   }
 }

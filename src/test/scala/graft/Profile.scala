@@ -21,10 +21,13 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * Defaults: Bench's sf0.1 data dir, 3 iterations, the bench headline
   * set, `local[Bench.resolvedCpus]`. One untimed warm-up pass, then N
   * timed passes to a noop sink with Bench's per-query state release
-  * between queries. Each timed query prints wall time, jobs, stages,
-  * tasks and task-seconds from one listener; the run ends with each
-  * query's minimum and the last pass's jobs per query. `Bench.probeSec`
-  * before and after the run shows host contention (~0.6 s idle).
+  * between queries. Each timed query prints wall time, build time
+  * (`build_ms`: DataFrame construction, where table resolution and
+  * eager pins run, so a job started before the write shows there),
+  * jobs, stages, tasks and task-seconds from one listener; the run
+  * ends with each query's minimum and the last pass's jobs per query.
+  * `Bench.probeSec` before and after the run shows host contention
+  * (~0.6 s idle).
   *
   *  - `--stages`: the per-stage split of each query's last pass.
   *  - `--plan`: each query's final adaptive executed plan.
@@ -64,8 +67,8 @@ object Profile {
   }
 
   final case class Stage(id: Int, tasks: Int, runSec: Double, shuffleReadMb: Double, name: String)
-  final case class Run(wallSec: Double, jobs: Int, stages: Seq[Stage], tasks: Int,
-                       taskSec: Double, plan: String)
+  final case class Run(wallSec: Double, buildSec: Double, jobs: Int, stages: Seq[Stage],
+                       tasks: Int, taskSec: Double, plan: String)
 
   /** Counts one query run at a time: jobs, stages and tasks from the
     * scheduler, the executed plan from the last successful execution
@@ -93,8 +96,9 @@ object Profile {
     override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
 
     def reset(): Unit = synchronized { jobs = 0; tasks = 0; taskMs = 0L; stages.clear(); lastQe = null }
-    def result(wallSec: Double): Run = synchronized {
-      Run(wallSec, jobs, stages.toSeq, tasks, taskMs / 1e3, Option(lastQe).fold("")(_.executedPlan.toString))
+    def result(wallSec: Double, buildSec: Double): Run = synchronized {
+      Run(wallSec, buildSec, jobs, stages.toSeq, tasks, taskMs / 1e3,
+        Option(lastQe).fold("")(_.executedPlan.toString))
     }
   }
 
@@ -113,10 +117,12 @@ object Profile {
     ProfileBus.drain(spark.sparkContext)
     rec.reset()
     val t0 = System.nanoTime()
-    query(spark, dir).write.format("noop").mode("overwrite").save()
+    val df = query(spark, dir)
+    val build = (System.nanoTime() - t0) / 1e9
+    df.write.format("noop").mode("overwrite").save()
     val wall = (System.nanoTime() - t0) / 1e9
     ProfileBus.drain(spark.sparkContext)
-    try rec.result(wall) finally Verify.releaseQueryState(spark)
+    try rec.result(wall, build) finally Verify.releaseQueryState(spark)
   }
 
   private def fmt(pattern: String, args: Any*): String = pattern.formatLocal(Locale.ROOT, args: _*)
@@ -132,8 +138,8 @@ object Profile {
       (1 to o.iters).map { i =>
         names.map { n =>
           val r = measure(spark, rec, n, o.sf)
-          println(fmt("pass %d %-28s wall %7.3f s  jobs %3d  stages %3d  tasks %5d  task_s %8.3f",
-            i, n, r.wallSec, r.jobs, r.stages.size, r.tasks, r.taskSec))
+          println(fmt("pass %d %-28s wall %7.3f s  build_ms %6.0f  jobs %3d  stages %3d  tasks %5d  task_s %8.3f",
+            i, n, r.wallSec, r.buildSec * 1e3, r.jobs, r.stages.size, r.tasks, r.taskSec))
           n -> r
         }
       }

@@ -7,6 +7,7 @@ class ProfileSpec extends SparkTestBase {
     val r = Profile.withRecorder(spark)(Profile.measure(spark, _, "q16_message_count", sfDir))
     assert(r.jobs >= 1)
     assert(r.taskSec >= 0.0)
+    assert(r.buildSec >= 0.0 && r.buildSec <= r.wallSec)
     assert(r.plan.nonEmpty)
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.ProfileBus
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterEach
 import org.scalatest.funsuite.AnyFunSuite
@@ -14,6 +15,15 @@ object SparkTestSession {
 abstract class SparkTestBase extends AnyFunSuite with BeforeAndAfterEach {
   lazy val spark: SparkSession = SparkTestSession.spark
   val sfDir = "/root/testdata/sf0.001"
+
+  /** Spark jobs started while `body` runs. */
+  def jobsDuring(body: => Unit): Int = Profile.withRecorder(spark) { rec =>
+    ProfileBus.drain(spark.sparkContext)
+    rec.reset()
+    body
+    ProfileBus.drain(spark.sparkContext)
+    rec.result(0.0, 0.0).jobs
+  }
 
   // queries may cache intermediates (e.g. q35's shingle rows); the
   // session is JVM-wide, so drop cached blocks between tests

@@ -54,70 +54,61 @@ object ConnectedComponents {
     val edges = pairs.select(col(a).as("x"), col(b).as("y"))
       .unionAll(pairs.select(col(b).as("x"), col(a).as("y")))
       .transform(Pin(_, eager = true)) // reused every round
-    // Initial labels FUSE the old identity round: with identity
-    // labels, round 1's neighbor-min join could only produce
-    // lbl = min(node, min neighbor id) — which one aggregation over
-    // the edge table computes directly (every node appears as x in
-    // the bidirectional table, so the coverage is the old distinct's).
-    // One groupBy replaces the old init distinct PLUS the first
-    // propagate round's join; on the dense (clique-ish) graphs
-    // near-dup pairs produce this is a full round of the 2-4 the loop
-    // runs (round-18 A/B at sf1: q70 CC phase 3.7 → 2.8 s).
-    var labels = edges.groupBy(col("x"))
-      .agg(min(col("y")).as("_nl"))
-      .select(col("x").as("node"), least(col("x"), col("_nl")).as("lbl"))
-      .transform(Pin(_, eager = true))
-    var pinned = labels // previous round's pin, released once superseded
-    var converged = false
-    var it = 0
-    while (!converged && it < maxIter) {
-      it += 1
-      val nbrMin = edges.join(labels, edges("y") === labels("node"))
-        .groupBy(col("x")).agg(min(col("lbl")).as("nl"))
-      val prop = labels.join(nbrMin, labels("node") === nbrMin("x"), "left")
-        .select(col("node"), col("lbl"),
-          least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("mid"))
-      // pointer halving: follow the propagated label one more step
-      // through the label map (every label IS some node of the same
-      // component, so the lookup always hits); min keeps monotonicity.
-      // Runs from the first loop round — labels are never the identity
-      // map here (the fused init already collapsed one hop).
-      // Convergence detection rides the round's OWN materialization
-      // (round 19, guide §1.2 don't serialize jobs): a named observe()
-      // over max(nxt < lbl) is collected by CollectMetricsExec DURING
-      // the eager pin's job — the former separate isEmpty probe
-      // (executeTake over the pinned blocks) cost one extra driver
-      // round-trip job per round. The metric is read straight from the
-      // executed plan's accumulators (queryExecution.observedMetrics),
-      // NOT via an Observation handle: Observation registers a
-      // permanent entry + listener in the session's ObservationManager
-      // with no unregister API, and that manager is not
-      // java-serializable — a later query whose task closure captures
-      // the session (e.g. spark.ml model lambdas holding their
-      // training summary) then fails to serialize (caught by
-      // RegressionHeadSpec in the shared test session).
-      val obsName = s"cc_round_$it"
-      val observed = {
-          val look = labels.select(col("node").as("ln"), col("lbl").as("ll"))
+    // The live round's pin, released once superseded, and on every
+    // exit but success, where the result IS its blocks.
+    var pinned: DataFrame = null
+    try {
+      // Initial labels FUSE the old identity round: with identity
+      // labels, round 1's neighbor-min join could only produce
+      // lbl = min(node, min neighbor id) — which one aggregation over
+      // the edge table computes directly (every node appears as x in
+      // the bidirectional table, so the coverage is the old distinct's).
+      // One groupBy replaces the old init distinct PLUS the first
+      // propagate round's join; on the dense (clique-ish) graphs
+      // near-dup pairs produce this is a full round of the 2-4 the loop
+      // runs (round-18 A/B at sf1: q70 CC phase 3.7 → 2.8 s).
+      var labels = edges.groupBy(col("x"))
+        .agg(min(col("y")).as("_nl"))
+        .select(col("x").as("node"), least(col("x"), col("_nl")).as("lbl"))
+        .transform(Pin(_, eager = true))
+      pinned = labels
+      var converged = false
+      var it = 0
+      while (!converged && it < maxIter) {
+        it += 1
+        val nbrMin = edges.join(labels, edges("y") === labels("node"))
+          .groupBy(col("x")).agg(min(col("lbl")).as("nl"))
+        val prop = labels.join(nbrMin, labels("node") === nbrMin("x"), "left")
+          .select(col("node"), col("lbl"),
+            least(col("lbl"), coalesce(col("nl"), col("lbl"))).as("mid"))
+        // pointer halving: follow the propagated label one more step
+        // through the label map (every label IS some node of the same
+        // component, so the lookup always hits); min keeps monotonicity.
+        // Runs from the first loop round — labels are never the identity
+        // map here (the fused init already collapsed one hop).
+        // Convergence detection rides the round's own pin (Pin.withFlag).
+        val look = labels.select(col("node").as("ln"), col("lbl").as("ll"))
+        val (next, changed) = Pin.withFlag(
           prop.join(look, prop("mid") === look("ln"))
-            .select(col("node"), col("lbl"), least(col("mid"), col("ll")).as("nxt"))
-        }
-        .observe(obsName, max(col("nxt") < col("lbl")).as("changed"))
-      val next = Pin(observed, eager = true)
-      // (A second shortcut hop per round was A/B'd here in round 18:
-      // it did not reduce the round count on the near-dup graphs and
-      // its extra lookup join cost ~40% per round — not applied.)
-      converged = !observed.queryExecution.observedMetrics.get(obsName)
-        .exists(r => !r.isNullAt(0) && r.getBoolean(0))
-      Pin.release(pinned) // the superseded round's blocks
-      pinned = next
-      labels = next.select(col("node"), col("nxt").as("lbl"))
+            .select(col("node"), col("lbl"), least(col("mid"), col("ll")).as("nxt")),
+          s"cc_round_$it", col("nxt") < col("lbl"))
+        // (A second shortcut hop per round was A/B'd here in round 18:
+        // it did not reduce the round count on the near-dup graphs and
+        // its extra lookup join cost ~40% per round — not applied.)
+        converged = !changed
+        Pin.release(pinned) // the superseded round's blocks
+        pinned = next
+        labels = next.select(col("node"), col("nxt").as("lbl"))
+      }
+      require(converged,
+        s"connected components did not converge in $maxIter rounds " +
+          "(pathological high-diameter component — raise maxIter)")
+      pinned = null // the caller's now
+      (labels.select(col("node"), col("lbl").as("cluster_id")), it)
+    } finally {
+      Pin.release(edges) // the result depends only on the final pin
+      if (pinned != null) Pin.release(pinned)
     }
-    require(converged,
-      s"connected components did not converge in $maxIter rounds " +
-        "(pathological high-diameter component — raise maxIter)")
-    Pin.release(edges) // the result depends only on the final pin
-    (labels.select(col("node"), col("lbl").as("cluster_id")), it)
   }
 
   /** End-to-end dedup tail: drop every document that belongs to a

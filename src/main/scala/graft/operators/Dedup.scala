@@ -460,35 +460,6 @@ object Dedup {
       nearPairs.select(col("a"), col("b_id").as("b"), col("hamming")).distinct()
   }
 
-  /** Exact-substring duplication signal (Lee et al. 2022,
-    * "Deduplicating Training Data Makes Language Models Better" —
-    * long verbatim substrings shared ACROSS documents are the
-    * duplication mode word-level shingles miss): per document, how
-    * many of its L-character windows also occur in at least one other
-    * document.
-    *
-    * Shape: one native [[graft.plans.RollingHashes]] pass per row
-    * (O(chars) rolling recurrence — the suffix-array fingerprint
-    * stream without the suffix array), explode to slim (doc_id, h)
-    * int64 rows, ONE (h, doc_id)-keyed count (map-side combine
-    * absorbs within-doc window repetition), per-hash doc counts from
-    * its own partitioning, and a hash-keyed join back — every
-    * exchange keyed and linear in the window count. Windows are keyed
-    * on the 40-bit-range polynomial hash, never the substring: the
-    * shuffle carries 8-byte longs instead of L-char strings (same
-    * trade as ShingleHashes), at a ~n²/2M false-positive rate both
-    * engines share bit-for-bit.
-    *
-    * `anchorMod` is the SCALE DIAL (sf10 soak, BENCH_SF10.md): at
-    * s > 1 only windows with h % s == 0 enter the aggregation —
-    * CONTENT-DEFINED anchoring, so both copies of a duplicated span
-    * select the SAME ~1/s of its windows (a doc_id- or
-    * position-based stride would misalign across copies and miss
-    * everything). Detection of spans ≥ L + s·E chars survives w.h.p.
-    * (an anchor lands every ~s windows); `dup_windows` then counts
-    * anchored windows only — scale the fraction by s for the
-    * corpus-level signal. s = 1 (default, the oracle setting) keeps
-    * every window. */
   /** CONTENT-DEFINED CHUNK duplication (CDC — the identity layer
     * between q34's whole-document fingerprint and q77's fixed 40-char
     * windows, the rsync/storage-dedup technique applied to passages):
@@ -540,23 +511,7 @@ object Dedup {
         1, 12), 16, 10).cast("long")
     })
     val occ = staged.select(col("doc_id"), explode(chunkHashes).as("ch"))
-    // Same size-adaptive exchange shape as [[dupSubstringStats]] (see
-    // [[combineMinBytes]]): one ch-keyed exchange of the raw chunk
-    // stream at bench scale, map-side-combined (ch, doc) aggregation +
-    // ch re-key at scale (skew-safe two-phase for hot shared chunks).
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("ch"))
-    val perDoc =
-      if (combineFirst.getOrElse(inputBytes(docs) >= combineMinBytes))
-        occ.groupBy(col("ch"), col("doc_id"))
-          .agg(count(lit(1)).as("c"))
-          .repartition(col("ch"))
-      else
-        occ.repartition(col("ch"))
-          .groupBy(col("ch"), col("doc_id"))
-          .agg(count(lit(1)).as("c"))
-    val dups = perDoc.withColumn("nd", count(lit(1)).over(w))
-      .filter(col("nd") >= 2)
-      .groupBy(col("doc_id")).agg(sum(col("c")).as("dup_chunks"))
+    val dups = dupCounts(occ, "ch", docs, combineFirst, "dup_chunks")
     staged.select(col("doc_id"), nb.cast("long").as("n_chunks"))
       .join(dups, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_chunks"),
@@ -602,7 +557,62 @@ object Dedup {
   private def inputBytes(df: DataFrame): BigInt =
     df.queryExecution.optimizedPlan.stats.sizeInBytes
 
-  /** `combineFirst`: None (default) derives the exchange shape from
+  /** Per doc, the summed count of its (`key`, doc_id) `occ` rows whose
+    * key occurs in ≥ 2 docs, as (doc_id, `out`); docs with none are
+    * absent. Exchange shape (see [[combineMinBytes]], sized on
+    * `docs`): one key-partitioned exchange of the raw stream at bench
+    * scale (the second exchange's fixed cost dominates a few-MB
+    * shuffle), map-side-combined (key, doc) aggregation + key re-key
+    * at scale (skew-safe two-phase — a hot key's occurrences collapse
+    * per doc before the wire). The per-key doc count is a window over
+    * that partitioning, not a groupBy + join-back pair (the round-11
+    * lesson). */
+  private def dupCounts(occ: DataFrame, key: String, docs: DataFrame,
+                        combineFirst: Option[Boolean], out: String): DataFrame = {
+    val k = col(key)
+    val perDoc =
+      if (combineFirst.getOrElse(inputBytes(docs) >= combineMinBytes))
+        occ.groupBy(k, col("doc_id")).agg(count(lit(1)).as("c")).repartition(k)
+      else
+        occ.repartition(k).groupBy(k, col("doc_id")).agg(count(lit(1)).as("c"))
+    perDoc
+      .withColumn("nd", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy(k)))
+      .filter(col("nd") >= 2)
+      .groupBy(col("doc_id")).agg(sum(col("c")).as(out))
+  }
+
+  /** Exact-substring duplication signal (Lee et al. 2022,
+    * "Deduplicating Training Data Makes Language Models Better" —
+    * long verbatim substrings shared ACROSS documents are the
+    * duplication mode word-level shingles miss): per document, how
+    * many of its L-character windows also occur in at least one other
+    * document.
+    *
+    * Shape: one native [[graft.plans.RollingHashes]] pass per row
+    * (O(chars) rolling recurrence — the suffix-array fingerprint
+    * stream without the suffix array), explode to slim (doc_id, h)
+    * int64 rows, ONE (h, doc_id)-keyed count (map-side combine
+    * absorbs within-doc window repetition), per-hash doc counts from
+    * its own partitioning, and a hash-keyed join back — every
+    * exchange keyed and linear in the window count. Windows are keyed
+    * on the 40-bit-range polynomial hash, never the substring: the
+    * shuffle carries 8-byte longs instead of L-char strings (same
+    * trade as ShingleHashes), at a ~n²/2M false-positive rate both
+    * engines share bit-for-bit.
+    *
+    * `anchorMod` is the SCALE DIAL (sf10 soak, BENCH_SF10.md): at
+    * s > 1 only windows with h % s == 0 enter the aggregation —
+    * CONTENT-DEFINED anchoring, so both copies of a duplicated span
+    * select the SAME ~1/s of its windows (a doc_id- or
+    * position-based stride would misalign across copies and miss
+    * everything). Detection of spans ≥ L + s·E chars survives w.h.p.
+    * (an anchor lands every ~s windows); `dup_windows` then counts
+    * anchored windows only — scale the fraction by s for the
+    * corpus-level signal. s = 1 (default, the oracle setting) keeps
+    * every window.
+    *
+    * `combineFirst`: None (default) derives the exchange shape from
     * the input's size (see [[combineMinBytes]]); Some(_) pins it —
     * the spec hook that lets both shapes be equality-checked on the
     * same data regardless of its size. */
@@ -615,26 +625,7 @@ object Dedup {
     val occ =
       if (anchorMod == 1) allOcc
       else allOcc.filter(col("h") % anchorMod === 0)
-    // Exchange shape (see [[combineMinBytes]]): one h-keyed exchange
-    // of the raw stream at bench scale (the second exchange's fixed
-    // cost dominates a few-MB shuffle), map-side-combined (h, doc)
-    // aggregation + h re-key at scale (skew-safe two-phase — a hot
-    // 40-char window's occurrences collapse per doc before the wire).
-    // The window (not a groupBy(h) + join-back pair) keeps the
-    // round-11 lesson either way.
-    val w = org.apache.spark.sql.expressions.Window.partitionBy(col("h"))
-    val perDoc =
-      if (combineFirst.getOrElse(inputBytes(docs) >= combineMinBytes))
-        occ.groupBy(col("h"), col("doc_id"))
-          .agg(count(lit(1)).as("c"))
-          .repartition(col("h"))
-      else
-        occ.repartition(col("h"))
-          .groupBy(col("h"), col("doc_id"))
-          .agg(count(lit(1)).as("c"))
-    val dups = perDoc.withColumn("nd", count(lit(1)).over(w))
-      .filter(col("nd") >= 2)
-      .groupBy(col("doc_id")).agg(sum(col("c")).as("dup_windows"))
+    val dups = dupCounts(occ, "h", docs, combineFirst, "dup_windows")
     val nw = greatest(length(col("text")) - (l - 1), lit(0)).cast("long")
     docs.select(col("doc_id"), nw.as("n_windows"))
       .join(dups, Seq("doc_id"), "left")
@@ -723,15 +714,8 @@ object Dedup {
       .filter(col("nd2") >= 2)
       .select(col("h"), col("slice"),
         col("owner.doc_id").as("odoc"), col("owner.pos").as("opos"))
-    val removals = candS.join(groups, Seq("h", "slice"))
-      .filter(!(col("doc_id") === col("odoc") && col("pos") === col("opos")))
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_set(col("pos"))).as("ps"))
-    docs.join(removals, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("ps").isNull, col("text"))
-          .otherwise(graft.plans.RemoveSpans(col("text"), col("ps"), l))
-          .as("clean_text"))
+    cutSpans(docs, candS.join(groups, Seq("h", "slice"))
+      .filter(!(col("doc_id") === col("odoc") && col("pos") === col("opos"))), l)
   }
 
   /** SURGICAL benchmark decontamination: instead of q71's flag (drop
@@ -760,16 +744,25 @@ object Dedup {
       .select(col("col").as("h"),
         expr(s"substring(text, pos + 1, $l)").as("bslice"))
       .distinct()
-    val removals = train
+    val cuts = train
       .select(col("doc_id"), col("text"),
         posexplode(graft.plans.RollingHashes(col("text"), l)))
       .select(col("doc_id"), col("pos").cast("long").as("pos"),
         col("col").as("h"), col("text"))
       .join(broadcast(benchW), Seq("h"))
       .filter(expr(s"substring(text, pos + 1, $l)") === col("bslice"))
-      .groupBy(col("doc_id"))
+    cutSpans(train, cuts, l)
+  }
+
+  /** The span-cut tail of [[stripDupSpans]] and [[decontaminateStrip]]:
+    * each doc's cut window starts (the `pos` of its `cuts` rows) go
+    * into one sorted array and leave its text in one native pass
+    * ([[graft.plans.RemoveSpans]]); a doc with no cut keeps its text.
+    * Returns (doc_id, clean_text) for every row of `docs`. */
+  private def cutSpans(docs: DataFrame, cuts: DataFrame, l: Int): DataFrame = {
+    val removals = cuts.groupBy(col("doc_id"))
       .agg(sort_array(collect_set(col("pos"))).as("ps"))
-    train.join(removals, Seq("doc_id"), "left")
+    docs.join(removals, Seq("doc_id"), "left")
       .select(col("doc_id"),
         when(col("ps").isNull, col("text"))
           .otherwise(graft.plans.RemoveSpans(col("text"), col("ps"), l))

@@ -52,22 +52,6 @@ object Diversity {
     def pri(node: Column): Column =
       conv(substring(md5(concat(lit(seed.toString), lit(":"),
         node.cast("string"))), 1, 12), 16, 10).cast("long")
-    // Round 19 (the CC convergence discipline, guide §1.2 don't
-    // serialize jobs): whether any node is still undecided rides each
-    // round's OWN eager-pin materialization as an observed metric
-    // instead of a separate count() job per round — read from
-    // observedMetrics directly (not an Observation handle; see
-    // ConnectedComponents). A presence flag, max(true), not a count:
-    // a reliable checkpoint's write job re-executes the plan and task
-    // retries re-run it, which can double a count but not a max.
-    def anyUndecided(obs: DataFrame, name: String): Boolean =
-      obs.queryExecution.observedMetrics.get(name)
-        .exists(r => !r.isNullAt(0) && r.getBoolean(0))
-    val undObs = edges.select(col("x").as("node")).distinct()
-      .withColumn("p", pri(col("node")))
-      .observe("mis_und_0", max(lit(true)).as("any"))
-    var und = Pin(undObs, eager = true)
-    var pinned = und
     // ONE accumulated output-sized pin for the kept set (round-12
     // fix): the old shape pinned every round's `sel` and kept ALL of
     // them resident until session end — O(rounds) live pins, the
@@ -77,17 +61,23 @@ object Diversity {
     // und chain + one kept pin, total O(nodes).
     var keptAcc: DataFrame = null
     // mid-round pins, tracked so ANY failure exit — a task failure
-    // surfaced by next.count(), an eager Pin materialization, the
-    // nbrMin job, or non-convergence — releases everything instead
-    // of stranding O(nodes) of blocks in a long-lived session (the
-    // leak class the success-path fix closed; a bare maxIter check
-    // alone would miss every exception path)
+    // surfaced by an eager Pin materialization, the nbrMin job, or
+    // non-convergence — releases everything instead of stranding
+    // O(nodes) of blocks in a long-lived session (the leak class the
+    // success-path fix closed; a bare maxIter check alone would miss
+    // every exception path)
+    var und: DataFrame = null
     var selLive: DataFrame = null
     var newAccLive: DataFrame = null
     var it = 0
-    var succeeded = false
     try {
-      var undecided = anyUndecided(undObs, "mis_und_0")
+      // whether any node is still undecided rides each round's own
+      // pin (Pin.withFlag)
+      val (und0, any0) = Pin.withFlag(
+        edges.select(col("x").as("node")).distinct().withColumn("p", pri(col("node"))),
+        "mis_und_0", lit(true))
+      und = und0
+      var undecided = any0
       while (undecided && it < maxIter) {
         it += 1
         // min (priority, id) among UNDECIDED neighbors
@@ -111,41 +101,33 @@ object Diversity {
         val dominated = edges
           .join(sel.select(col("node").as("sx")), edges("x") === col("sx"))
           .select(col("y").as("node"))
-        val nextObs = und
+        val (next, any) = Pin.withFlag(und
           .join(sel.select(col("node")), Seq("node"), "left_anti")
-          .join(dominated, Seq("node"), "left_anti")
-          .observe(s"mis_round_$it", max(lit(true)).as("any"))
-        val next = Pin(nextObs, eager = true)
-        undecided = anyUndecided(nextObs, s"mis_round_$it")
-        Pin.release(pinned)
+          .join(dominated, Seq("node"), "left_anti"),
+          s"mis_round_$it", lit(true))
+        undecided = any
+        Pin.release(und)
         Pin.release(sel)
         selLive = null
         if (keptAcc != null) Pin.release(keptAcc)
         keptAcc = newAcc
         newAccLive = null
-        pinned = next
         und = next
       }
       if (undecided)
         throw new IllegalStateException(
           s"independentSet did not converge in $maxIter rounds")
-      succeeded = true
+      // ownership of the single kept pin passes to the caller (the
+      // result IS the pin's blocks — localCheckpoint severed lineage)
+      val kept = keptAcc
+      keptAcc = null
+      (if (kept == null)
+        spark.emptyDataFrame.select(lit(0L).as("node")).limit(0)
+      else kept, it)
     } finally {
-      if (!succeeded) {
-        Pin.release(edges)
-        Pin.release(pinned)
-        if (selLive != null) Pin.release(selLive)
-        if (newAccLive != null) Pin.release(newAccLive)
-        if (keptAcc != null) Pin.release(keptAcc)
-      }
+      Pin.release(edges)
+      Seq(und, selLive, newAccLive, keptAcc).filter(_ != null).foreach(Pin.release)
     }
-    Pin.release(edges)
-    Pin.release(pinned)
-    // ownership of the single kept pin passes to the caller (the
-    // result IS the pin's blocks — localCheckpoint severed lineage)
-    (if (keptAcc == null)
-      spark.emptyDataFrame.select(lit(0L).as("node")).limit(0)
-    else keptAcc, it)
   }
 
   /** End-to-end diversity dedup: keep the MIS of the pair graph plus

@@ -39,40 +39,51 @@ object GlobalRank {
   /** Adds `out` = dense 1-based global row number in `sortCols` order
     * (nulls first, matching SQL `NULLS FIRST`). */
   def withRowNumber(df: DataFrame, sortCols: Seq[Column], out: String): DataFrame = {
+    val (parted, offset) = rangeOffsets(df, sortCols, count(lit(1)), _
+      .withColumn("__mid", monotonically_increasing_id())
+      .withColumn("__pid", shiftright(col("__mid"), 33).cast("int"))
+      .withColumn("__local", col("__mid").bitwiseAND(lit((1L << 33) - 1))))
+    parted
+      .withColumn(out, (col("__local") + offset + 1L).cast("long"))
+      .drop("__mid", "__pid", "__local")
+  }
+
+  /** Steps 1 and 3 above, shared with [[SequencePack.withBin]]: `df`
+    * range-partitioned and sorted on `sortCols`, given the columns
+    * `perRow` adds (which must include the int partition id `__pid`),
+    * pinned eagerly; plus the offset column, per row the aggregate
+    * `total` summed over every partition before its own. */
+  private[operators] def rangeOffsets(df: DataFrame, sortCols: Seq[Column],
+      total: Column, perRow: DataFrame => DataFrame): (DataFrame, Column) = {
     val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
     // Range partitioning EXECUTES its child twice — once for the
     // reservoir sample that picks the boundaries, once for the real
     // shuffle — so an expensive upstream projection (q98's quality
-    // score, q104's BPE token count: full passes over the text
-    // column) runs twice. Pin the input rows once; both the sample
-    // and the shuffle read the materialized slim rows. Local pin: it
-    // is released a few lines down, so the reliable-checkpoint tier
-    // would only add an FS round-trip it can never benefit from.
+    // score, q67/q96/q104's BPE token count: full passes over the
+    // text column) runs twice. Pin the input rows once; both the
+    // sample and the shuffle read the materialized slim rows. Local
+    // pin: it is released a few lines down, so the reliable-checkpoint
+    // tier would only add an FS round-trip it can never benefit from.
     val pinned = Pin.local(df, eager = true)
     val parted = pinned
       .repartitionByRange(n, sortCols: _*)
       .sortWithinPartitions(sortCols: _*)
-      .withColumn("__mid", monotonically_increasing_id())
-      .withColumn("__pid", shiftright(col("__mid"), 33).cast("int"))
-      .withColumn("__local", col("__mid").bitwiseAND(lit((1L << 33) - 1)))
-      .transform(Pin(_, eager = true)) // one upstream pass feeds counts + result
-    // parted's eager pin holds the assigned positions now; the input
+      .transform(perRow)
+      .transform(Pin(_, eager = true))
+    // parted's eager pin holds the per-row columns now; the input
     // pin's blocks are dead weight (slim, but release them anyway —
     // packBinned callers hold a row per document)
     Pin.release(pinned)
-    val counts = parted.groupBy(col("__pid")).agg(count(lit(1)).as("c"))
+    val totals = parted.groupBy(col("__pid")).agg(total)
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    // prefix-sum: offset(p) = rows in partitions before p
+    // prefix-sum: offset(p) = total of the partitions before p
     val offsets: Map[Int, Long] = {
       var acc = 0L
-      counts.keys.toSeq.sorted.map { p =>
-        val o = p -> acc; acc += counts(p); o
+      totals.keys.toSeq.sorted.map { p =>
+        val o = p -> acc; acc += totals(p); o
       }.toMap
     }
-    val lookup =
-      if (offsets.isEmpty) lit(0L) else element_at(typedlit(offsets), col("__pid"))
-    parted
-      .withColumn(out, (col("__local") + lookup + 1L).cast("long"))
-      .drop("__mid", "__pid", "__local")
+    (parted,
+      if (offsets.isEmpty) lit(0L) else element_at(typedlit(offsets), col("__pid")))
   }
 }

@@ -1,6 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.functions.max
 
 /** Lineage pin: materialize a DataFrame once so a plan that references
   * it on multiple branches (self-joins, agg + probe) cannot recompute
@@ -22,6 +23,36 @@ object Pin {
   def apply(df: DataFrame, eager: Boolean = false): DataFrame =
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager)
     else df.localCheckpoint(eager)
+
+  /** Eager pin plus a presence flag: pins `df` eagerly and returns
+    * the pin and whether any row of `df` has `flag` true (false on an
+    * empty `df`). The iterative drivers (ConnectedComponents' "did a
+    * label change?", Diversity's "is a node still undecided?") read
+    * their loop condition this way.
+    *
+    * The flag rides the pin's OWN materialization (round 19): a named
+    * observe() over `max(flag)` is collected by CollectMetricsExec
+    * DURING the eager pin's job — a separate isEmpty or count probe
+    * costs one extra driver round-trip job per round. The metric is
+    * read straight from the executed plan's accumulators
+    * (queryExecution.observedMetrics), NOT via an Observation handle:
+    * Observation registers a permanent entry + listener in the
+    * session's ObservationManager with no unregister API, and that
+    * manager is not java-serializable — a later query whose task
+    * closure captures the session (e.g. spark.ml model lambdas holding
+    * their training summary) then fails to serialize (caught by
+    * RegressionHeadSpec in the shared test session). A presence flag,
+    * max, not a count: a reliable checkpoint's write job re-executes
+    * the plan and task retries re-run it, which can double a count but
+    * not a max.
+    *
+    * `name` must be unique among the metrics of one plan. */
+  def withFlag(df: DataFrame, name: String, flag: Column): (DataFrame, Boolean) = {
+    val observed = df.observe(name, max(flag).as("flag"))
+    val pinned = apply(observed, eager = true)
+    (pinned, observed.queryExecution.observedMetrics.get(name)
+      .exists(r => !r.isNullAt(0) && r.getBoolean(0)))
+  }
 
   /** Executor-local pin even when a checkpoint dir is configured.
     * For EPHEMERAL intra-operator pins that are released before the

@@ -109,35 +109,14 @@ object SequencePack {
   def withBin(df: DataFrame, tokenCol: Column, sortCols: Seq[Column],
               capacity: Long, out: String = "bin"): DataFrame = {
     require(capacity > 0, "pack: capacity must be positive")
-    val n = df.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt
-    // pin before the range exchange: its boundary-sampling pass would
-    // otherwise re-run the caller's upstream (q67/q96 compute the BPE
-    // token count below this exchange — a full regex pass over text).
-    // Local pin: released a few lines down, so the reliable tier's FS
-    // write could never pay for itself.
-    val pinned = Pin.local(df, eager = true)
-    val parted = pinned
-      .repartitionByRange(n, sortCols: _*)
-      .sortWithinPartitions(sortCols: _*)
+    val (parted, offset) = GlobalRank.rangeOffsets(df, sortCols, sum(col("__tok")), _
       .withColumn("__tok", tokenCol.cast("long"))
-      .withColumn("__pid", spark_partition_id())
-      .transform(Pin(_, eager = true)) // one upstream pass feeds totals + result
-    Pin.release(pinned)
-    val totals = parted.groupBy(col("__pid")).agg(sum(col("__tok")).as("t"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val offsets: Map[Int, Long] = {
-      var acc = 0L
-      totals.keys.toSeq.sorted.map { p =>
-        val o = p -> acc; acc += totals(p); o
-      }.toMap
-    }
-    val lookup =
-      if (offsets.isEmpty) lit(0L) else element_at(typedlit(offsets), col("__pid"))
+      .withColumn("__pid", spark_partition_id()))
     val wLocal = org.apache.spark.sql.expressions.Window
       .partitionBy(col("__pid")).orderBy(sortCols: _*)
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, -1)
     parted
-      .withColumn("__before", coalesce(sum(col("__tok")).over(wLocal), lit(0L)) + lookup)
+      .withColumn("__before", coalesce(sum(col("__tok")).over(wLocal), lit(0L)) + offset)
       .withColumn(out, floor(col("__before") / capacity).cast("bigint"))
       .drop("__tok", "__pid", "__before")
   }

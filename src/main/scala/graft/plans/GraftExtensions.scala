@@ -4,12 +4,11 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** SparkSessionExtensions entry point: registers graft's native
-  * expressions with the session function registry so SQL text can use
-  * them (`SELECT quantized_dot(a, b)`), not just the DataFrame API,
-  * and graft's optimizer rules (banded rewrite of keyless
-  * time-proximity joins; at runtime, small global sorts on one
-  * partition).
+/** SparkSessionExtensions entry point: registers the native
+  * `quantized_dot` expression with the session function registry so
+  * SQL text can use it (`SELECT quantized_dot(a, b)`), not just the
+  * DataFrame API, and the AQE runtime rule [[SmallSortRule]] (small
+  * global sorts on one partition).
   *
   * Activate with
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")`
@@ -26,7 +25,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
           s"quantized_dot expects 2 arguments, got ${children.length}")
         QuantizedDotProduct(children.head, children(1))
       }))
-    ext.injectOptimizerRule(_ => BandedRangeJoinRule)
     ext.injectRuntimeOptimizerRule(_ => SmallSortRule)
   }
 }

@@ -82,55 +82,6 @@ object SessionStream {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.EventTimeTimeout)(update)
   }
 
-  /** Running per-instance heuristic scores, updated every
-    * micro-batch (the reference's streaming heuristic applicator —
-    * reference: explorer_server.py applies heuristics/count.py and
-    * ratio.py continuously as instances stream in). State per
-    * instance is four counters; emitted in update mode.
-    */
-  case class InstanceEvent(instanceId: Int, ts: Timestamp, eventType: String, value: Double)
-  case class InstanceStats(nEvents: Long, nMessages: Long, nCommands: Long, sumMsgLen: Double)
-  case class InstanceHeuristics(instanceId: Int, nEvents: Long, nMessages: Long,
-      nCommands: Long, msgCmdRatio: Option[Double], avgMsgLen: Option[Double])
-
-  def runningHeuristics(events: Dataset[InstanceEvent]): Dataset[InstanceHeuristics] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .groupByKey(_.instanceId)
-      .mapGroupsWithState[InstanceStats, InstanceHeuristics](GroupStateTimeout.NoTimeout) {
-        (id, batch, state) =>
-          var s = state.getOption.getOrElse(InstanceStats(0, 0, 0, 0.0))
-          for (e <- batch) {
-            val isMsg = e.eventType == "click" || e.eventType == "view"
-            s = InstanceStats(
-              s.nEvents + 1,
-              s.nMessages + (if (isMsg) 1 else 0),
-              s.nCommands + (if (e.eventType == "purchase") 1 else 0),
-              s.sumMsgLen + (if (isMsg) e.value else 0.0))
-          }
-          state.update(s)
-          InstanceHeuristics(id, s.nEvents, s.nMessages, s.nCommands,
-            if (s.nCommands > 0) Some(s.nMessages.toDouble / s.nCommands) else None,
-            if (s.nMessages > 0) Some(s.sumMsgLen / s.nMessages) else None)
-      }
-  }
-
-  /** Streaming exact-dedup: drops redelivered events (Kinesis-style
-    * at-least-once ingest) by id within the watermark horizon — state
-    * holds one key per event inside the horizon, aged out by the
-    * watermark instead of growing forever. The streaming counterpart
-    * of the batch exact-dedup (q34). */
-  def dedupedEvents(events: Dataset[StreamEvent], idCols: Seq[String],
-                    watermarkDelay: String = "10 seconds"): Dataset[StreamEvent] = {
-    val spark = events.sparkSession
-    import spark.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark(idCols.head, idCols.tail: _*)
-      .as[StreamEvent]
-  }
-
   /** Stream-stream interval join: each command event paired with the
     * same-user message events from the `lookbackSec` window ending at
     * the command (the reference's distill1 message→command pairing

@@ -44,27 +44,6 @@ object StreamDedup {
       .withWatermark("ts", watermarkDelay)
       .dropDuplicatesWithinWatermark("content_key")
 
-  /** One incoming embedding record (event-time in `ts`). */
-  case class Vec(vecId: Long, ts: Timestamp, embedding: Seq[Float])
-
-  /** Distinct-embedding stream: the online half of q72's
-    * dedup-before-indexing — first arrival of each exact-dup FAMILY
-    * (key = md5 of the quantized int64 vector,
-    * [[graft.functions.VectorFunctions.quantizeQ]] — the same family
-    * identity the batch `Similarity.nearDupPairs` collapses on, so
-    * online and batch agree on what an exact duplicate is) within the
-    * watermark horizon. Run ahead of any ANN indexing ingest: the
-    * sf10 soak measured 10,303x candidate-volume avoidance from
-    * exactly this collapse. State is one 32-char hash per family in
-    * the horizon — independent of embedding dimensionality. */
-  def distinctByEmbedding(vecs: Dataset[Vec],
-                          watermarkDelay: String = "10 seconds"): DataFrame =
-    vecs
-      .withColumn("family_key",
-        md5(graft.functions.VectorFunctions.quantizeQ(col("embedding")).cast("string")))
-      .withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark("family_key")
-
   /** One incoming image record (event-time in `ts`). */
   case class Img(imgId: Long, ts: Timestamp, payload: Array[Byte])
 
@@ -79,16 +58,9 @@ object StreamDedup {
     * batch `Multimodal.imageNearDupPairs` handles those; state is one
     * 8-byte hash per distinct image in the horizon. */
   def distinctByImageHash(imgs: Dataset[Img],
-                          watermarkDelay: String = "10 seconds"): DataFrame = {
-    val spark = imgs.sparkSession
-    import spark.implicits._
-    imgs
-      .flatMap(r => graft.multimodal.Multimodal.dHashOf(r.payload)
-        .map(h => (r.imgId, r.ts, h)))
-      .toDF("img_id", "ts", "dhash")
-      .withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark("dhash")
-  }
+                          watermarkDelay: String = "10 seconds"): DataFrame =
+    firstPerHash(imgs, graft.multimodal.Multimodal.dHashOf, "img_id", "dhash",
+      watermarkDelay)
 
   /** Distinct-audio stream — [[distinctByImageHash]]'s analog keyed
     * on the 60-bit energy-profile fingerprint
@@ -98,14 +70,22 @@ object StreamDedup {
     * batch `Multimodal.audioNearDupPairs`'s job. Undecodable
     * payloads dropped; state one 8-byte hash per distinct clip. */
   def distinctByAudioHash(clips: Dataset[Img],
-                          watermarkDelay: String = "10 seconds"): DataFrame = {
-    val spark = clips.sparkSession
+                          watermarkDelay: String = "10 seconds"): DataFrame =
+    firstPerHash(clips, graft.multimodal.Multimodal.audioFpOf, "clip_id", "afp",
+      watermarkDelay)
+
+  /** First arrival of each `hashOf(payload)` key within the watermark
+    * horizon, as (`idCol`, ts, `keyCol`); payloads `hashOf` cannot
+    * decode (None) are dropped. */
+  private def firstPerHash(rows: Dataset[Img], hashOf: Array[Byte] => Option[Long],
+                           idCol: String, keyCol: String,
+                           watermarkDelay: String): DataFrame = {
+    val spark = rows.sparkSession
     import spark.implicits._
-    clips
-      .flatMap(r => graft.multimodal.Multimodal.audioFpOf(r.payload)
-        .map(h => (r.imgId, r.ts, h)))
-      .toDF("clip_id", "ts", "afp")
+    rows
+      .flatMap(r => hashOf(r.payload).map(h => (r.imgId, r.ts, h)))
+      .toDF(idCol, "ts", keyCol)
       .withWatermark("ts", watermarkDelay)
-      .dropDuplicatesWithinWatermark("afp")
+      .dropDuplicatesWithinWatermark(keyCol)
   }
 }

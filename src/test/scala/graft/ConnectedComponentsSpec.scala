@@ -38,10 +38,14 @@ class ConnectedComponentsSpec extends SparkTestBase {
   test("unconverged high-diameter graph fails loudly at maxIter") {
     import spark.implicits._
     val chain = (1L to 12L).sliding(2).map(s => (s.head, s.last)).toSeq.toDF("a", "b")
+    val persistedBefore = spark.sparkContext.getPersistentRDDs.size
     val boom = intercept[IllegalArgumentException] {
       ConnectedComponents.clusters(chain, maxIter = 1).count()
     }
     assert(boom.getMessage.contains("did not converge"))
+    // the failing call releases its edge pin and its live round pin
+    assert(spark.sparkContext.getPersistentRDDs.size <= persistedBefore,
+      "a failed clusters call left pins registered")
     // and with room it converges to the single min label
     val ok = ConnectedComponents.clusters(chain, maxIter = 20)
     assert(ok.filter(col("cluster_id") =!= 1L).isEmpty)

@@ -96,27 +96,14 @@ class PlanSpec extends SparkTestBase {
     // static planner's compressed-file-size estimate of the exploded
     // band side can dip under the broadcast threshold and collect 3x
     // the fact table to the driver (caught live in round 9: +1 s at
-    // sf1, OOM at scale). RangeJoin and the BandedRangeJoinRule
-    // rewrite pin SHUFFLE_HASH; this locks the executed plan.
+    // sf1, OOM at scale). RangeJoin pins SHUFFLE_HASH; this locks the
+    // executed plan.
     val q54 = SparkEntry.queries("q54_range_pairs")(spark, sfDir)
       .queryExecution.executedPlan.toString
     assert(q54.contains("ShuffledHashJoin"),
       s"q54's band join is not a shuffled hash join:\n$q54")
     assert(!q54.contains("BroadcastHashJoin"),
       s"q54 plans a broadcast join over a corpus-sized side:\n$q54")
-    // the rule path: a user-authored abs-inequality join rewrites to
-    // the banded form AND inherits the pin
-    val sqlJoin = spark.sql(
-      s"""SELECT count(*) FROM
-        |  (SELECT event_id a_id, unix_micros(CAST(ts AS TIMESTAMP)) a_ts
-        |   FROM parquet.`$sfDir/events.parquet`) a
-        |JOIN
-        |  (SELECT event_id b_id, unix_micros(CAST(ts AS TIMESTAMP)) b_ts
-        |   FROM parquet.`$sfDir/events.parquet`) b
-        |ON abs(a.a_ts - b.b_ts) <= 60000000""".stripMargin)
-      .queryExecution.executedPlan.toString
-    assert(sqlJoin.contains("ShuffledHashJoin"),
-      s"BandedRangeJoinRule output is not a shuffled hash join:\n$sqlJoin")
   }
 
   test("corpus-shaped joins in the round-11 corpus ops never broadcast") {

@@ -30,7 +30,9 @@ import org.apache.spark.sql.util.QueryExecutionListener
   * (~0.6 s idle).
   *
   *  - `--stages`: the per-stage split of each query's last pass.
-  *  - `--plan`: each query's final adaptive executed plan.
+  *  - `--plan`: each query's final adaptive executed plan, with
+  *    expression, exchange and stage ids replaced by fixed tokens
+  *    ([[normalizePlan]]), so the plans of two runs diff cleanly.
   *  - `--conf k=v`: a SQL conf set in-process before the first pass.
   *    `k=v1|v2|...`: an interleaved A/B — N rounds, each value in its
   *    own fresh JVM (same classpath and JVM arguments; warm-up plus one
@@ -125,6 +127,14 @@ object Profile {
     try rec.result(wall, build) finally Verify.releaseQueryState(spark)
   }
 
+  /** `plan` with its run-dependent numbers replaced by fixed tokens:
+    * expression ids (`#1234`), exchange `plan_id=` values, and the
+    * query-stage and codegen-stage ids, which follow the order in
+    * which AQE's stages happened to finish. */
+  def normalizePlan(plan: String): String =
+    plan.replaceAll("#\\d+", "#N").replaceAll("plan_id=\\d+", "plan_id=N")
+      .replaceAll("QueryStage \\d+", "QueryStage N").replaceAll("\\*\\(\\d+\\)", "*(N)")
+
   private def fmt(pattern: String, args: Any*): String = pattern.formatLocal(Locale.ROOT, args: _*)
 
   private def profile(o: Opts): Unit = {
@@ -153,7 +163,7 @@ object Profile {
             s.id, s.tasks, s.runSec, s.shuffleReadMb, s.name.take(90)))
         }
       }
-      if (o.plan) println(s"== final plan of $n ==\n${r.plan}")
+      if (o.plan) println(s"== final plan of $n ==\n${normalizePlan(r.plan)}")
     }
     val mins = names.map(n => n -> passes.map(_.toMap.apply(n).wallSec).min)
     mins.foreach { case (n, s) => println(fmt("min %-28s %8.3f s", n, s)) }

@@ -9,6 +9,7 @@ class ProfileSpec extends SparkTestBase {
     assert(r.taskSec >= 0.0)
     assert(r.buildSec >= 0.0 && r.buildSec <= r.wallSec)
     assert(r.plan.nonEmpty)
+    assert("#\\d|plan_id=\\d|Stage \\d|\\*\\(\\d".r.findFirstIn(Profile.normalizePlan(r.plan)).isEmpty)
   }
 
   test("parseArgs: --conf without '=' is rejected; one and several values parse") {

@@ -2,13 +2,12 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{AsOfJoin, Bucketing, RangeJoin, SaltedJoin}
+import graft.operators.{AsOfJoin, Bucketing, RangeJoin}
 
-/** The scale-join operators: as-of (union+window), banded range join,
-  * salted skew join, and bucketed co-located joins — semantics checked
-  * against naive formulations, plan shape checked for the properties
-  * that matter at scale (no inequality joins, no exchanges on bucketed
-  * joins). */
+/** The scale-join operators: as-of (union+window), banded range join
+  * and bucketed co-located joins — semantics checked against naive
+  * formulations, plan shape checked for the properties that matter at
+  * scale (no inequality joins, no exchanges on bucketed joins). */
 class ScaleJoinSpec extends SparkTestBase {
 
   test("as-of join: at-or-before semantics with deterministic ties") {
@@ -59,58 +58,27 @@ class ScaleJoinSpec extends SparkTestBase {
     assert(banded.count() > 0, "degenerate test: no pairs at all")
   }
 
-  test("salted join equals the plain join under heavy key skew") {
-    import spark.implicits._
-    // one hot key with 5000 rows, plus a long tail
-    val probe = ((1 to 5000).map(i => (42L, i.toLong)) ++
-      (1 to 100).map(i => (i.toLong % 7, 10000L + i))).toDF("k", "payload")
-    val build = Seq((42L, "hot"), (1L, "a"), (2L, "b"), (9L, "missing-on-probe"))
-      .toDF("k", "name")
-    val salted = SaltedJoin.inner(probe, build, "k", salts = 8)
-      .select(col("k"), col("payload"), col("name"))
-    val plain = probe.join(build, Seq("k"))
-      .select(col("k"), col("payload"), col("name"))
-    assert(salted.except(plain).isEmpty && plain.except(salted).isEmpty,
-      "salted join changed the result set")
-    assert(salted.count() == plain.count(), "row multiplicity differs")
-  }
-
-  test("optimizer auto-bands a keyless time-proximity join: no nested loop, same rows") {
-    import spark.implicits._
-    val l = (0L to 200L by 10).map(t => (t, s"l$t")).toDF("ts", "lv")
-    val r = (0L to 200L by 7).map(t => (t, s"r$t")).toDF("ts2", "rv")
-    // no equi condition: un-rewritten this can only be a nested loop
-    val joined = l.join(r, abs(col("ts") - col("ts2")) <= 10)
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("BroadcastNestedLoopJoin") && !plan.contains("CartesianProduct"),
-      s"rule did not fire:\n$plan")
-    val got = joined.select(col("ts"), col("ts2")).collect()
-      .map(row => (row.getLong(0), row.getLong(1))).toSet
-    val expect = (for {
-      a <- 0L to 200L by 10; b <- 0L to 200L by 7 if math.abs(a - b) <= 10
-    } yield (a, b)).toSet
-    assert(got == expect, "banded rewrite changed the result set")
-  }
-
-  test("optimizer leaves equi-keyed range joins alone") {
-    import spark.implicits._
-    val l = Seq((1L, 5L), (1L, 50L), (2L, 5L)).toDF("k", "ts")
-    val r = Seq((1L, 7L), (2L, 100L)).toDF("k2", "ts2")
-    val joined = l.join(r, col("k") === col("k2") && abs(col("ts") - col("ts2")) <= 10)
-    assert(!joined.queryExecution.optimizedPlan.toString.contains("_graft_band"),
-      "rule must not fire when an equality conjunct exists")
-    assert(joined.count() == 1)
-  }
-
   test("Pin upgrades to reliable checkpoint when a checkpoint dir is configured") {
     import spark.implicits._
     val mode = org.apache.spark.sql.execution.ExplainMode.fromString("formatted")
     def plan(d: org.apache.spark.sql.DataFrame): String =
       d.queryExecution.explainString(mode)
     val df = (1L to 100L).toDF("id")
+    // the presence flag of Pin.withFlag reads true on a frame with a
+    // matching row and false on one without, on either tier: the
+    // reliable tier's write job runs the plan again, which must not
+    // turn a false flag true
+    def flag(name: String, c: org.apache.spark.sql.Column): Boolean = {
+      val (pinned, f) = graft.operators.Pin.withFlag(df, name, c)
+      graft.operators.Pin.release(pinned)
+      f
+    }
+    def flags(): (Boolean, Boolean) =
+      (flag("pin_flag_hit", col("id") === 50L), flag("pin_flag_miss", col("id") > 100L))
     // no checkpoint dir (this build's default): executor-local pin
     assert(spark.sparkContext.getCheckpointDir.isEmpty)
     assert(plan(graft.operators.Pin(df)).contains("at localCheckpoint"))
+    assert(flags() == (true, false))
     val dir = java.nio.file.Files.createTempDirectory("ckpt")
     try {
       spark.sparkContext.setCheckpointDir(dir.toString)
@@ -124,6 +92,7 @@ class ScaleJoinSpec extends SparkTestBase {
         try s.anyMatch(f => java.nio.file.Files.isRegularFile(f)) finally s.close()
       }
       assert(nonEmpty(dir), "reliable checkpoint wrote nothing to the checkpoint dir")
+      assert(flags() == (true, false))
     } finally {
       // Option(null) => None: restores the no-checkpoint-dir default
       spark.sparkContext.setCheckpointDir(null)

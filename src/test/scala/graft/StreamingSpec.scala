@@ -123,24 +123,6 @@ class StreamingSpec extends SparkTestBase {
     } finally query.stop()
   }
 
-  test("streaming dedup drops redelivered events across micro-batches") {
-    implicit val ctx = spark.sqlContext
-    import spark.implicits._
-    val input = MemoryStream[StreamEvent]
-    val query = SessionStream.dedupedEvents(input.toDS(), Seq("userId", "ts"))
-      .writeStream.format("memory").queryName("dedup_out").outputMode("append").start()
-    try {
-      input.addData(ev(1, 100), ev(1, 100), ev(2, 100))   // in-batch duplicate
-      query.processAllAvailable()
-      input.addData(ev(1, 100), ev(1, 105))               // cross-batch redelivery
-      query.processAllAvailable()
-      val got = spark.table("dedup_out")
-        .select("userId", "ts").collect()
-        .map(r => (r.getLong(0), r.getTimestamp(1).getTime)).sorted.toSeq
-      assert(got == Seq((1L, 100000L), (1L, 105000L), (2L, 100000L)))
-    } finally query.stop()
-  }
-
   test("streaming content dedup: same text under different ids passes once within the horizon") {
     implicit val ctx = spark.sqlContext
     import spark.implicits._
@@ -171,32 +153,6 @@ class StreamingSpec extends SparkTestBase {
         .select("docId").collect().map(_.getLong(0)).sorted.toSeq
       assert(got == Seq(1L, 2L, 5L, 6L, 7L),
         s"expected first-arrival-per-content within horizon, got $got")
-    } finally query.stop()
-  }
-
-  test("streaming embedding dedup: exact-dup families pass once; near-but-not-equal vectors both pass") {
-    implicit val ctx = spark.sqlContext
-    import spark.implicits._
-    import graft.streaming.StreamDedup
-    import graft.streaming.StreamDedup.Vec
-    val base = (1 to 64).map(_.toFloat / 64f)
-    // 1e-3 is far above the floor(x*1e7) quantum: a distinct family
-    val distinct = base.map(x => x + 1e-3f)
-    def v(id: Long, sec: Long, e: Seq[Float]): Vec =
-      Vec(id, new Timestamp(sec * 1000), e)
-    val input = MemoryStream[Vec]
-    val query = StreamDedup.distinctByEmbedding(input.toDS(), "10 seconds")
-      .writeStream.format("memory").queryName("vdedup_out").outputMode("append").start()
-    try {
-      // in-batch family dup under a DIFFERENT vec id
-      input.addData(v(1, 100, base), v(2, 101, base), v(3, 101, distinct))
-      query.processAllAvailable()
-      input.addData(v(4, 103, base)) // cross-batch family redelivery
-      query.processAllAvailable()
-      val got = spark.table("vdedup_out")
-        .select("vecId").collect().map(_.getLong(0)).sorted.toSeq
-      assert(got == Seq(1L, 3L),
-        s"expected one survivor per exact-dup family, got $got")
     } finally query.stop()
   }
 
@@ -410,35 +366,6 @@ class StreamingSpec extends SparkTestBase {
       val p = spark.table("sclean_cls_out").select("doc_id", "p_quality")
         .as[(Long, Double)].collect().toMap
       assert(p.values.forall(v => v >= threshold && v <= 1.0))
-    } finally query.stop()
-  }
-
-  test("running heuristics accumulate across micro-batches per instance") {
-    implicit val ctx = spark.sqlContext
-    import spark.implicits._
-    import SessionStream.InstanceEvent
-    val input = MemoryStream[InstanceEvent]
-    val query = SessionStream.runningHeuristics(input.toDS())
-      .writeStream.format("memory").queryName("heur_out").outputMode("update").start()
-    try {
-      def e(inst: Int, sec: Long, et: String, v: Double) =
-        InstanceEvent(inst, new Timestamp(sec * 1000), et, v)
-      input.addData(e(1, 10, "click", 4.0), e(1, 20, "purchase", 0.0), e(2, 30, "view", 6.0))
-      query.processAllAvailable()
-      input.addData(e(1, 40, "view", 8.0), e(1, 50, "error", 0.0))
-      query.processAllAvailable()
-
-      val last = spark.table("heur_out")
-        .orderBy(col("nEvents").desc)
-        .collect().groupBy(_.getInt(0))
-        .map { case (k, rows) => k -> rows.maxBy(_.getLong(1)) }
-      val i1 = last(1)
-      assert(i1.getLong(1) == 4 && i1.getLong(2) == 2 && i1.getLong(3) == 1)
-      assert(i1.getDouble(4) == 2.0)   // 2 messages / 1 command
-      assert(i1.getDouble(5) == 6.0)   // (4 + 8) / 2
-      val i2 = last(2)
-      assert(i2.getLong(1) == 1 && i2.getLong(2) == 1 && i2.getLong(3) == 0)
-      assert(i2.isNullAt(4))
     } finally query.stop()
   }
 
